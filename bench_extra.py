@@ -1,10 +1,10 @@
-"""Round-7 optimization harness (guide §1): noop-sink isolation of each
-ER-pipeline stage and sub-operator, plus plan capture for the headline
-queries. NOT part of the driver contract — bench.py stays frozen; this
-file exists so OPTIMIZATION_r07.md can cite reproducible numbers.
+"""Side-car measurement helpers next to the frozen bench.py: plan
+capture and warm timings for the headline queries.
+Per-stage and per-operator timings of the shipped pipeline come from the
+traced benchmark run (``perfbench/run.py --trace 1``), whose operator
+probes are row-checked against the shipped snapshots.
 
 Usage:
-  python bench_extra.py stages          # per-stage + sub-op timings
   python bench_extra.py plans [outdir]  # explain("formatted") captures
   python bench_extra.py micro           # headline micro-queries, warm x3
 """
@@ -14,16 +14,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from entity_knowledge_in_bert_spark import datagen  # noqa: E402
 from entity_knowledge_in_bert_spark.plans import queries as Q  # noqa: E402
-from entity_knowledge_in_bert_spark.plans.pipeline import ERPipeline  # noqa: E402
 from entity_knowledge_in_bert_spark.session import get_spark  # noqa: E402
-from entity_knowledge_in_bert_spark.sources.tableio import TableIO  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -36,131 +32,6 @@ HEADLINE = [
 ]
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "20000"))
-
-
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _t(label, fn, spark=None):
-    if spark is not None:
-        spark.sparkContext.setJobDescription(label)
-    t0 = time.time()
-    out = fn()
-    dt = round(time.time() - t0, 3)
-    print(json.dumps({"op": label, "sec": dt}), flush=True)
-    if spark is not None:
-        spark.sparkContext.setJobDescription(None)
-    return out
-
-
-def stages() -> None:
-    from pyspark.sql import functions as F
-
-    from entity_knowledge_in_bert_spark.operators import (
-        blocking, cluster, encoder, mentions, pairs, scoring,
-    )
-    from entity_knowledge_in_bert_spark.operators.extract import (
-        with_extracted_text,
-    )
-
-    spark = get_spark("bench_extra")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # full pipeline warm-up + timed run (same shape as bench.py)
-    with tempfile.TemporaryDirectory(prefix="bx_warm_") as wh:
-        ERPipeline(spark, TableIO(spark, wh)).run(
-            datagen.gen_pages_df(spark, N_PAGES)
-        )
-    for run in range(2):
-        t0 = time.time()
-        with tempfile.TemporaryDirectory(prefix="bx_") as wh:
-            pipe = ERPipeline(spark, TableIO(spark, wh))
-            pipe.run(datagen.gen_pages_df(spark, N_PAGES))
-        print(json.dumps({
-            "op": f"pipeline_run{run}", "sec": round(time.time() - t0, 3),
-            "stages": {k: round(v, 3) for k, v in pipe.timings.items()},
-        }), flush=True)
-
-    # sub-operator isolation: persist a warehouse, then noop-time each
-    # stage's internal pieces against the materialized snapshots.
-    wh = tempfile.mkdtemp(prefix="bx_iso_")
-    io = TableIO(spark, wh)
-    pipe = ERPipeline(spark, io)
-
-    pages = datagen.gen_pages_df(spark, N_PAGES)
-    _t("datagen_noop", lambda: _noop(pages), spark)
-
-    # --- extract internals
-    latest = mentions.latest_snapshot(mentions.english_pages(pages))
-    _t("extract.filter+latest_noop", lambda: _noop(latest), spark)
-    extracted = with_extracted_text(latest).select(
-        "url", "warc_ts", F.col("text_extracted").alias("text"), "lang"
-    )
-    _t("extract.+udf_noop", lambda: _noop(extracted), spark)
-    _t("extract.write", lambda: pipe.stage_extract(pages), spark)
-
-    # --- mention internals
-    ext = io.read("stage_extract")
-    aliases = datagen.alias_df(spark)
-    det = mentions.detect_mentions(ext, aliases)
-    _t("mention.detect_noop", lambda: _noop(det), spark)
-    idf = _t("mention.compute_idf", lambda: encoder.compute_idf(
-        spark, ext, "text"), spark)
-    idf_bc = spark.sparkContext.broadcast(idf)
-    embed = encoder.make_encoder_udf(idf_bc)
-    emb = det.withColumn("vec", embed(F.col("ctx_left"), F.col("ctx_right")))
-    _t("mention.detect+embed_noop", lambda: _noop(emb), spark)
-    _t("mention.write", pipe.stage_mention, spark)
-
-    # --- block internals
-    m = io.read("stage_mention")
-    cand = mentions.candidate_entities(m, aliases)
-    _t("block.candidates_noop", lambda: _noop(cand), spark)
-    salts = blocking.entity_salts(cand, pipe.max_block)
-    _t("block.salts_noop", lambda: _noop(salts), spark)
-    keys = blocking.block_keys(m, cand, max_block=pipe.max_block)
-    _t("block.keys_noop", lambda: _noop(keys), spark)
-    _t("block.write", pipe.stage_block, spark)
-
-    # --- pairs internals
-    keys = io.read("stage_block")
-    p = pairs.within_block_pairs(keys)
-    _t("pairs.gen_noop", lambda: _noop(p), spark)
-    _t("pairs.write", pipe.stage_pairs, spark)
-
-    # --- score internals
-    p = io.read("stage_pairs")
-    m = io.read("stage_mention")
-    feat = pairs.attach_features(p, m)
-    _t("score.attach_noop", lambda: _noop(feat), spark)
-    scored = scoring.score_pairs(feat, aliases)
-    _t("score.score_noop", lambda: _noop(scored), spark)
-    _t("score.write", pipe.stage_score, spark)
-
-    # --- cluster internals (connected_components runs its actions
-    # EAGERLY at call time — init checkpoint + signature collects — so
-    # construction must sit inside the timer)
-    edges = io.read("stage_score")
-    n_edges = io.snapshot_entry("stage_score")["rows"]
-    print(json.dumps({"op": "cluster.n_edges", "n": n_edges}), flush=True)
-    _t(
-        "cluster.cc_noop",
-        lambda: _noop(cluster.connected_components(edges, n_edges=n_edges)),
-        spark,
-    )
-    _t(
-        "cluster.cc_loop_noop",
-        lambda: _noop(cluster.connected_components(edges)),
-        spark,
-    )
-    _t("cluster.write", pipe.stage_cluster, spark)
-
-    import shutil
-
-    shutil.rmtree(wh, ignore_errors=True)
-    spark.stop()
 
 
 def plans(outdir: str = "plans/r07", suffix: str = "before") -> None:
@@ -197,10 +68,8 @@ def micro() -> None:
 
 
 if __name__ == "__main__":
-    cmd = sys.argv[1] if len(sys.argv) > 1 else "stages"
-    if cmd == "stages":
-        stages()
-    elif cmd == "plans":
+    cmd = sys.argv[1] if len(sys.argv) > 1 else "micro"
+    if cmd == "plans":
         plans(*sys.argv[2:])
     elif cmd == "micro":
         micro()

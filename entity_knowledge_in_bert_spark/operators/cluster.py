@@ -187,15 +187,13 @@ def _contract_partitions(canon: DataFrame) -> DataFrame:
     unchanged (equality-tested vs the uncontracted loop). Output is
     canonical (u > v) because the root is the local min.
 
-    When it pays (and when it doesn't — measured, BASELINE.md r6): on
-    HIGH-DIAMETER edge sets a length-L intra-partition chain collapses
-    to depth 1 before the first shuffle, replacing O(log L) LS/SS
-    rounds. On the ER pipeline's dense block-clique topology it is
-    NEUTRAL: cliques are incompressible by node-local stars (a clique's
-    contraction is the same star LS/SS iteration 0 produces anyway) and
-    each node's edges scatter across ~min(degree, parts) partitions, so
-    the pass re-emits ~1 row per (node, partition) incidence. Hence
-    default-off in ``connected_components``. At 10^11 edges the pass
+    When it pays (measured, BASELINE.md r6): a partition must hold a
+    whole connected piece. On the ER pipeline's block-clique topology an
+    edge-hashed layout scatters each node's edges across ~min(degree,
+    parts) partitions and the pass re-emits ~1 row per (node, partition)
+    incidence, so ``connected_components`` runs it only after
+    repartitioning by ``contract_by`` (the block key), which co-locates
+    each block's matched subgraph. At 10^11 edges the pass
     runs on ~2M-edge partitions (32 MB arrays, bounded by
     ``_plan_frontier_partitions``), one narrow pass, no shuffle."""
 
@@ -310,7 +308,6 @@ def connected_components(
     on_iteration=None,
     start_frontier: DataFrame | None = None,
     n_edges: int | None = None,
-    local_contract: bool = False,
     contract_by: str | None = None,
 ) -> DataFrame:
     """EDGES(src, dst, ...) -> (mention_id, cluster_id).
@@ -327,26 +324,15 @@ def connected_components(
     iteration reaches the same fixpoint as an uninterrupted run
     (equality-tested in test_cc_durable_iterations).
 
-    ``local_contract``: run the partition-local contraction pre-pass
-    (``_contract_partitions``) on the fresh-edges path before the LS/SS
-    loop — same fixpoint (equality-tested in test_cc_contract_equality).
-    Default OFF, from measurement (BASELINE.md r6): the pipeline's match
-    graph is dense block-CLIQUES (~24 distinct canonical edges per node
-    at the 400k probe), which local contraction cannot compress — each
-    node's edges scatter across ~min(degree, parts) partitions and every
-    partition re-emits nearly every node it sees (measured 16.4M ->
-    16.2M). Turn it ON for high-diameter edge sets (chains/trees from
-    e.g. as-of linkage), where it collapses a length-L chain before the
-    first shuffle instead of after O(log L) LS/SS rounds.
-
     ``contract_by``: name of an edge column (e.g. the blocking key) to
-    GROUP the contraction pre-pass by — the fix for exactly the scatter
-    that makes ``local_contract`` neutral on block-clique topologies.
-    Repartitioning by the block key co-locates each block's ENTIRE
-    matched subgraph in one partition, so ``_contract_partitions``
-    collapses it to one star edge per non-root member: the LS/SS loop's
-    input shrinks from ~degree edges/node (measured ~24 at the 400k
-    probe) to ~#(node, block) memberships. Costs the same single
+    GROUP a partition-local contraction pre-pass by. An ungrouped
+    pre-pass cannot compress the pipeline's block-clique match graph —
+    each node's edges scatter across ~min(degree, parts) partitions
+    (BASELINE.md r6). Repartitioning by the block key co-locates each
+    block's ENTIRE matched subgraph in one partition, so
+    ``_contract_partitions`` collapses it to one star edge per non-root
+    member: the LS/SS loop's input shrinks from ~degree edges/node
+    (measured ~24 at the 400k probe) to ~#(node, block) memberships. Costs the same single
     exchange as the default init (keyed by block instead of by edge) on
     the full edge set; every subsequent iteration shuffles the
     contracted set. Same fixpoint (star contraction is CC-preserving
@@ -443,8 +429,6 @@ def connected_components(
             .repartition(parts, "u", "v")
             .dropDuplicates()
         )
-        if local_contract:
-            canon = _contract_partitions(canon)
         cur = canon.localCheckpoint(eager=True)
     _bracket(before)
     prev_sig = None

@@ -14,6 +14,10 @@ corpus, so the engine adds the incremental path as a first-class plan:
       -> score  (same kernels/thresholds as batch)
       -> merge_components (re-clusters ONLY touched components)
 
+The extract, mention, block and score plans and every stage write are
+the batch pipeline's own (plans/pipeline.py): the delta runs them on
+append-only reads and writes in append mode.
+
 Every table write is an APPEND snapshot (TableIO includes-chain /
 Iceberg fast-append) except the output cluster table, which is replaced.
 Work scales with |delta| x (avg touched-block size): the corpus-sized
@@ -38,50 +42,32 @@ compact-out on resurrection; the table scales with re-crawl churn, not
 the corpus.
 """
 
-from __future__ import annotations
 
-import time
+from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import datagen
-from ..operators import blocking, encoder, mentions, pairs, scoring
-from ..operators.extract import with_extracted_text
+from ..operators import blocking, mentions, pairs
+from ..operators.cluster import LOCAL_CC_MAX_EDGES, assign_clusters
 from ..operators.incremental import merge_components
 from ..sources.tableio import TableIO
+from .pipeline import ERPipeline, extract_plan
 
 
 class IncrementalER:
     """Delta merge over a warehouse previously built by ERPipeline.run().
 
-    Reuses the batch pipeline's frozen artifacts (model_idf,
-    block_salts) so delta mentions embed and block IDENTICALLY to the
-    base run — the invariant that makes cross(base, delta) pairs
-    discoverable at all.
+    Runs the batch pipeline's stage builders on the delta, with its
+    frozen artifacts (model_idf, block_salts) so delta mentions embed
+    and block IDENTICALLY to the base run — the invariant that makes
+    cross(base, delta) pairs discoverable at all.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        io: TableIO,
-        max_block: int = 64,
-        block_contract: bool = True,
-    ):
-        """``block_contract`` mirrors ERPipeline's flag (same default,
-        and a base+delta warehouse must use the SAME setting on both
-        paths): carry the blocking key onto the delta's match edges so
-        stage_score stays schema-homogeneous across base + delta
-        snapshots (a chain read resolves ONE footer's schema — mixed
-        snapshots would silently drop or null the column). The delta
-        merge itself clusters the touched subgraph via merge_components
-        (no contraction needed at delta size); the carried key serves
-        the NEXT full-frontier consumer (e.g. a batch re-cluster over
-        the accumulated edges)."""
+    def __init__(self, spark: SparkSession, io: TableIO, max_block: int = 64):
         self.spark = spark
         self.io = io
         self.max_block = max_block
-        self.block_contract = block_contract
         self.timings: dict[str, float] = {}
 
     def _frozen_idf(self) -> dict[str, float]:
@@ -116,246 +102,203 @@ class IncrementalER:
         attempt can be rolled back atomically before a replay
         (TableIO.rollback_tag — the streaming foreachBatch exactly-once
         contract)."""
-        t0 = time.time()
-        aliases = datagen.alias_df(self.spark)
+        pipe = ERPipeline(self.spark, self.io, self.max_block)
+        pipe.timings = self.timings
+        w = {"append": True, "tag": tag}
 
-        # -- recrawl reconciliation (retract path) ------------------------
-        # one bounded action: which delta urls are genuinely newer than
-        # the stored extract (semi join on the delta's url set only —
-        # never a full-corpus aggregate)
-        latest = mentions.latest_snapshot(mentions.english_pages(delta_pages))
-        base_ts = (
-            self.io.read("stage_extract")
-            .select("url", "warc_ts")
-            .join(latest.select("url").distinct(), "url", "semi")
-            .groupBy("url")
-            .agg(F.max("warc_ts").alias("_base_ts"))
-        )
-        fresh = latest.join(base_ts, "url", "left").filter(
-            F.col("_base_ts").isNull() | (F.col("warc_ts") > F.col("_base_ts"))
-        )
-        recrawled = fresh.filter(F.col("_base_ts").isNotNull()).select("url")
-        fresh = fresh.drop("_base_ts")
-        n_recrawled = recrawled.count()
-
-        # -- extract (identical kernel to batch; append) ------------------
-        extracted = with_extracted_text(fresh).select(
-            "url", "warc_ts", F.col("text_extracted").alias("text"), "lang"
-        )
-        ex_snap = self.io.write(
-            extracted, "stage_extract", stage="extract_delta", append=True,
-            tag=tag,
-        )
-        self.timings["extract"] = time.time() - t0
-
-        # -- mention: frozen IDF, append ----------------------------------
-        t0 = time.time()
-        # incremental read: ONLY the files the delta append wrote
-        delta_ex = self.io.read(
-            "stage_extract", ex_snap.snapshot_id, chain=False
-        )
-        m = mentions.detect_mentions(delta_ex, aliases)
-        idf_bc = self.spark.sparkContext.broadcast(self._frozen_idf())
-        embed = encoder.make_encoder_udf(idf_bc)
-        m = m.withColumn("vec", embed(F.col("ctx_left"), F.col("ctx_right")))
-        # same projection as the batch write (pipeline.MENTION_TABLE_COLS):
-        # context columns are consumed by the encoder above and must not
-        # land in the append chain (schema homogeneity + write bytes)
-        from .pipeline import MENTION_TABLE_COLS
-
-        m = m.select(*MENTION_TABLE_COLS)
-        retracts = None
-        resurrected = None
-        if n_recrawled:
-            # previous mentions of re-crawled urls that the new crawl did
-            # NOT re-emit are tombstoned; re-emitted ids (same url, begin,
-            # surface => same mention_id) stay base mentions and are NOT
-            # re-appended, so the chain never holds duplicate ids.
-            old_ids = (
-                self._live(self.io.read("stage_mention"))
-                .join(recrawled, "url", "semi")
-                .select("mention_id")
+        with pipe.timed("extract"):
+            # a chain read resolves ONE footer's schema: the delta's edges
+            # carry block_key exactly when the stored chain's do
+            pipe.block_contract = "block_key" in self.io.read("stage_score").columns
+            # -- recrawl reconciliation, BEFORE extraction so the
+            # extractor never runs on rows it then drops: one bounded
+            # action — which delta urls are genuinely newer than the
+            # stored extract (semi join on the delta's url set only —
+            # never a full-corpus aggregate)
+            latest = mentions.latest_snapshot(mentions.english_pages(delta_pages))
+            base_ts = (
+                self.io.read("stage_extract")
+                .select("url", "warc_ts")
+                .join(latest.select("url").distinct(), "url", "semi")
+                .groupBy("url")
+                .agg(F.max("warc_ts").alias("_base_ts"))
             )
-            new_ids = m.select("mention_id")
-            if self.io.exists("retracted_mentions"):
-                # RESURRECTION (a content revert): a re-emitted id that is
-                # currently tombstoned gets its tombstone CLEARED — the
-                # stored base row becomes live again (same span identity
-                # => stored context embedding, the documented re-emission
-                # approximation) — instead of being re-appended, which
-                # would leave the chain with duplicate ids permanently
-                # shadowed by the stale tombstone. The compacted tombstone
-                # table is rewritten in full (it scales with re-crawls,
-                # not the corpus) and the new retractions append onto it.
-                tomb = self.io.read("retracted_mentions")
-                resurrected = (
-                    tomb.join(new_ids, "mention_id", "semi")
+            fresh = latest.join(base_ts, "url", "left").filter(
+                F.col("_base_ts").isNull() | (F.col("warc_ts") > F.col("_base_ts"))
+            )
+            recrawled = fresh.filter(F.col("_base_ts").isNotNull()).select("url")
+            n_recrawled = recrawled.count()
+            ex_snap = pipe.write("extract", extract_plan(fresh), **w)
+
+        with pipe.timed("mention"):
+            # incremental read: ONLY the files the delta append wrote
+            m = pipe.mention_plan(
+                self.io.read("stage_extract", ex_snap.snapshot_id, chain=False),
+                self._frozen_idf(),
+            )
+            retracts = resurrected = None
+            if n_recrawled:
+                # previous mentions of re-crawled urls that the new crawl
+                # did NOT re-emit are tombstoned; re-emitted ids (same
+                # url, begin, surface => same mention_id) stay base
+                # mentions and are NOT re-appended, so the chain never
+                # holds duplicate ids.
+                old_ids = (
+                    self._live(self.io.read("stage_mention"))
+                    .join(recrawled, "url", "semi")
                     .select("mention_id")
+                )
+                new_ids = m.select("mention_id")
+                if self.io.exists("retracted_mentions"):
+                    # RESURRECTION (a content revert): a re-emitted id
+                    # that is currently tombstoned gets its tombstone
+                    # CLEARED — the stored base row becomes live again
+                    # (same span identity => stored context embedding, the
+                    # documented re-emission approximation) — instead of
+                    # being re-appended, which would leave the chain with
+                    # duplicate ids permanently shadowed by the stale
+                    # tombstone. The compacted tombstone table is
+                    # rewritten in full (it scales with re-crawls, not the
+                    # corpus) and the new retractions append onto it.
+                    tomb = self.io.read("retracted_mentions")
+                    resurrected = (
+                        tomb.join(new_ids, "mention_id", "semi")
+                        .select("mention_id")
+                        .distinct()
+                    )
+                    if resurrected.count():
+                        self.io.write(
+                            tomb.join(new_ids, "mention_id", "left_anti"),
+                            "retracted_mentions", stage="tombstone_compact",
+                            tag=tag,
+                        )
+                    else:
+                        resurrected = None
+                r_snap = self.io.write(
+                    old_ids.join(new_ids, "mention_id", "left_anti"),
+                    "retracted_mentions", stage="retract_delta", **w,
+                )
+                retracts = self.io.read(
+                    "retracted_mentions", r_snap.snapshot_id, chain=False
+                )
+                m = m.join(old_ids, "mention_id", "left_anti")
+                if resurrected is not None:
+                    # resurrected ids keep their stored base row — do not
+                    # append a second copy
+                    m = m.join(resurrected, "mention_id", "left_anti")
+            m_snap = pipe.write("mention", m, **w)
+
+        with pipe.timed("block"):
+            delta_m = self.io.read("stage_mention", m_snap.snapshot_id, chain=False)
+            delta_ids = delta_m.select("mention_id")
+            if resurrected is not None:
+                # resurrected mentions re-enter pairing/clustering as
+                # delta members: their stored rows are live again but they
+                # left the cluster table when they were retracted
+                delta_ids = delta_ids.unionByName(resurrected).distinct()
+            k_snap = pipe.block(
+                delta_m, frozen_salts=self.io.read("block_salts"), **w
+            )
+            delta_keys = self.io.read("stage_block", k_snap.snapshot_id, chain=False)
+            # touched blocks: base keys sharing a block_key with the delta
+            # — the ONLY corpus-sized join in the whole merge, and it's a
+            # semi join on a delta-derived key set (tombstoned mentions
+            # filtered: a retracted mention must not pair again)
+            all_keys = self._live(self.io.read("stage_block"))
+            touch = delta_keys.select("block_key")
+            if resurrected is not None:
+                # resurrected mentions were not re-blocked (their stored
+                # keys are live again) — their blocks are touched too, so
+                # they re-pair against current block members
+                touch = touch.unionByName(
+                    all_keys.join(resurrected, "mention_id", "semi").select(
+                        "block_key"
+                    )
+                )
+            touched_keys = all_keys.join(touch.distinct(), "block_key", "semi")
+            # Re-apply the block-size cap over the COMBINED base+delta key
+            # population (the delta's keys were capped on delta-only
+            # sizes): a block that grew past the cap across deltas is
+            # dropped from pairing exactly as a full batch rebuild would
+            # drop it, instead of growing quadratically forever. Residual
+            # asymmetry vs a rebuild — an accepted, conservative
+            # approximation, documented: (a) edges the base run already
+            # committed inside a since-grown block are never retracted;
+            # (b) a block the BASE run cap-dropped has no stored base
+            # keys, so delta mentions of it only pair among themselves.
+            # Both directions only SUPPRESS pairs (never invent merges) —
+            # the same recall trade the cap itself makes.
+            touched_keys = blocking.cap_by_size(touched_keys, self.max_block)
+
+        with pipe.timed("pairs"):
+            # within touched blocks, >=1 delta side
+            p = pairs.within_block_pairs(touched_keys)
+            has_delta_a = p.join(
+                delta_ids.withColumnRenamed("mention_id", "mention_a"),
+                "mention_a", "semi",
+            )
+            has_delta_b = p.join(
+                delta_ids.withColumnRenamed("mention_id", "mention_b"),
+                "mention_b", "semi",
+            )
+            new_pairs = has_delta_a.unionByName(has_delta_b).distinct()
+
+        with pipe.timed("score"):
+            score_snap = pipe.score(
+                new_pairs, self._live(self.io.read("stage_mention")), **w
+            )
+            edges = self.io.read("stage_score", score_snap.snapshot_id, chain=False)
+
+        with pipe.timed("cluster"):
+            # merge only touched components. Manifest-derived upper bounds
+            # for the touched subgraphs (guide §1.2 — free, no count
+            # jobs): the merge's star∪delta edge set is bounded by |old
+            # assignment| + |delta edges|; the retract re-solve's
+            # surviving subgraph by the full stage_score chain. Passed
+            # ONLY when the bound is small enough to take
+            # cluster._solve_local's exact single-task path; a bound above
+            # the cutover keeps the shuffle-width fallback — a
+            # corpus-loose bound must not widen the init exchange.
+            def _local_bound(n: int) -> int | None:
+                return n if 0 <= n <= LOCAL_CC_MAX_EDGES else None
+
+            merge_bound = _local_bound(
+                self.io.snapshot_entry("stage_cluster")["rows"] + score_snap.rows
+            )
+            old = self.io.read("stage_cluster").select("mention_id", "cluster_id")
+            if retracts is not None:
+                # removing a node can SPLIT a component: re-solve exactly
+                # the clusters that contained a retracted mention from
+                # their surviving edge subgraph (O(touched), never the
+                # corpus).
+                affected = (
+                    old.join(retracts, "mention_id", "semi")
+                    .select("cluster_id")
                     .distinct()
                 )
-                if resurrected.count():
-                    self.io.write(
-                        tomb.join(new_ids, "mention_id", "left_anti"),
-                        "retracted_mentions", stage="tombstone_compact",
-                        tag=tag,
-                    )
-                else:
-                    resurrected = None
-            r_snap = self.io.write(
-                old_ids.join(new_ids, "mention_id", "left_anti"),
-                "retracted_mentions", stage="retract_delta", append=True,
-                tag=tag,
-            )
-            retracts = self.io.read(
-                "retracted_mentions", r_snap.snapshot_id, chain=False
-            )
-            m = m.join(old_ids, "mention_id", "left_anti")
-            if resurrected is not None:
-                # resurrected ids keep their stored base row — do not
-                # append a second copy
-                m = m.join(resurrected, "mention_id", "left_anti")
-        m_snap = self.io.write(
-            m, "stage_mention", stage="mention_delta", append=True, tag=tag
-        )
-        self.timings["mention"] = time.time() - t0
-
-        # -- block: frozen salts; pair only touched blocks ----------------
-        t0 = time.time()
-        delta_m = self.io.read("stage_mention", m_snap.snapshot_id, chain=False)
-        delta_ids = delta_m.select("mention_id")
-        if resurrected is not None:
-            # resurrected mentions re-enter pairing/clustering as delta
-            # members: their stored rows are live again but they left the
-            # cluster table when they were retracted
-            delta_ids = delta_ids.unionByName(resurrected).distinct()
-        cand = mentions.candidate_entities(delta_m, aliases)
-        base_salts = self.io.read("block_salts")
-        # new entities (absent from the frozen artifact) get delta-sized
-        # moduli; append them so the NEXT delta freezes these too
-        new_salts = blocking.entity_salts(cand, self.max_block).join(
-            base_salts.select("entity_id"), "entity_id", "anti"
-        )
-        self.io.write(new_salts, "block_salts", stage="block_salts_delta",
-                      append=True, tag=tag)
-        salts = self.io.read("block_salts")
-        delta_keys = blocking.block_keys(
-            delta_m, cand, max_block=self.max_block, salts=salts
-        )
-        self.io.write(delta_keys, "stage_block", stage="block_delta",
-                      append=True, tag=tag)
-        # touched blocks: base keys sharing a block_key with the delta —
-        # the ONLY corpus-sized join in the whole merge, and it's a semi
-        # join on a delta-derived key set (tombstoned mentions filtered:
-        # a retracted mention must not pair again)
-        all_keys = self._live(self.io.read("stage_block"))
-        touch = delta_keys.select("block_key")
-        if resurrected is not None:
-            # resurrected mentions were not re-blocked (their stored keys
-            # are live again) — their blocks are touched too, so they
-            # re-pair against current block members
-            touch = touch.unionByName(
-                all_keys.join(resurrected, "mention_id", "semi").select(
-                    "block_key"
+                kept = old.join(affected, "cluster_id", "left_anti")
+                sub = (
+                    old.join(affected, "cluster_id", "semi")
+                    .join(retracts, "mention_id", "left_anti")
+                    .select("mention_id")
                 )
+                sub_edges = (
+                    self.io.read("stage_score")
+                    .join(sub.withColumnRenamed("mention_id", "src"), "src", "semi")
+                    .join(sub.withColumnRenamed("mention_id", "dst"), "dst", "semi")
+                )
+                resolved = assign_clusters(
+                    sub, sub_edges,
+                    n_edges=_local_bound(self.io.chain_rows("stage_score")),
+                ).select("mention_id", "cluster_id")
+                old = kept.unionByName(resolved)
+            merged = merge_components(old, edges, n_edges=merge_bound)
+            # isolated delta mentions -> singleton clusters (same
+            # convention as the batch stage_cluster)
+            singles = (
+                delta_ids.join(merged.select("mention_id"), "mention_id", "anti")
+                .withColumn("cluster_id", F.col("mention_id"))
             )
-        touched_keys = all_keys.join(
-            touch.distinct(), "block_key", "semi"
-        )
-        # Re-apply the block-size cap over the COMBINED base+delta key
-        # population (delta_keys alone was capped on delta-only sizes):
-        # a block that grew past the cap across deltas is dropped from
-        # pairing exactly as a full batch rebuild would drop it, instead
-        # of growing quadratically forever. Residual asymmetry vs a
-        # rebuild — an accepted, conservative approximation, documented:
-        # (a) edges the base run already committed inside a since-grown
-        # block are never retracted; (b) a block the BASE run cap-dropped
-        # has no stored base keys, so delta mentions of it only pair among
-        # themselves. Both directions only SUPPRESS pairs (never invent
-        # merges) — the same recall trade the cap itself makes.
-        touched_keys = blocking.cap_by_size(touched_keys, self.max_block)
-        self.timings["block"] = time.time() - t0
-
-        # -- pairs: within touched blocks, >=1 delta side -----------------
-        t0 = time.time()
-        p = pairs.within_block_pairs(touched_keys)
-        has_delta_a = p.join(
-            delta_ids.withColumnRenamed("mention_id", "mention_a"),
-            "mention_a", "semi",
-        )
-        has_delta_b = p.join(
-            delta_ids.withColumnRenamed("mention_id", "mention_b"),
-            "mention_b", "semi",
-        )
-        new_pairs = has_delta_a.unionByName(has_delta_b).distinct()
-        self.timings["pairs"] = time.time() - t0
-
-        # -- score: same kernels/thresholds as batch ----------------------
-        t0 = time.time()
-        all_m = self._live(self.io.read("stage_mention"))
-        feat = pairs.attach_features(new_pairs, all_m)
-        scored = scoring.score_pairs(feat, aliases)
-        keep = ("block_key",) if self.block_contract else ()
-        edges = scoring.match_edges(scored, keep=keep)
-        score_snap = self.io.write(edges, "stage_score", stage="score_delta",
-                                   append=True, tag=tag)
-        self.timings["score"] = time.time() - t0
-
-        # -- cluster: merge only touched components -----------------------
-        t0 = time.time()
-        # Manifest-derived upper bounds for the touched subgraphs (r7,
-        # guide §1.2 — free, no count jobs): the merge's star∪delta edge
-        # set is bounded by |old assignment| + |delta edges|; the retract
-        # re-solve's surviving subgraph by the full stage_score chain.
-        # Passed ONLY when the bound is small enough to take
-        # cluster._solve_local's exact single-task path (measured here:
-        # the 150-page-delta merge-cluster step was 65 s of LS/SS loop
-        # iterations for a subgraph one task solves in <1 s); a bound
-        # above the cutover keeps the previous shuffle-width fallback —
-        # a corpus-loose bound must not widen the init exchange.
-        from ..operators.cluster import LOCAL_CC_MAX_EDGES
-
-        def _local_bound(n: int) -> int | None:
-            return n if 0 <= n <= LOCAL_CC_MAX_EDGES else None
-
-        merge_bound = _local_bound(
-            self.io.snapshot_entry("stage_cluster")["rows"] + score_snap.rows
-        )
-        old = self.io.read("stage_cluster").select("mention_id", "cluster_id")
-        if retracts is not None:
-            # removing a node can SPLIT a component: re-solve exactly the
-            # clusters that contained a retracted mention from their
-            # surviving edge subgraph (O(touched), never the corpus).
-            from ..operators.cluster import assign_clusters
-
-            affected = (
-                old.join(retracts, "mention_id", "semi")
-                .select("cluster_id")
-                .distinct()
-            )
-            keep = old.join(affected, "cluster_id", "left_anti")
-            sub = (
-                old.join(affected, "cluster_id", "semi")
-                .join(retracts, "mention_id", "left_anti")
-                .select("mention_id")
-            )
-            all_edges = self.io.read("stage_score")
-            sub_edges = all_edges.join(
-                sub.withColumnRenamed("mention_id", "src"), "src", "semi"
-            ).join(sub.withColumnRenamed("mention_id", "dst"), "dst", "semi")
-            resolved = assign_clusters(
-                sub, sub_edges,
-                n_edges=_local_bound(self.io.chain_rows("stage_score")),
-            ).select("mention_id", "cluster_id")
-            old = keep.unionByName(resolved)
-        merged = merge_components(old, edges, n_edges=merge_bound)
-        # isolated delta mentions -> singleton clusters (same convention
-        # as the batch stage_cluster)
-        singles = (
-            delta_ids.join(merged.select("mention_id"), "mention_id", "anti")
-            .withColumn("cluster_id", F.col("mention_id"))
-        )
-        clusters = merged.unionByName(singles)
-        self.io.write(clusters, "stage_cluster", stage="cluster_merge",
-                      inputs=[self.io.latest_snapshot("stage_score")], tag=tag)
-        self.timings["cluster"] = time.time() - t0
+            pipe.write("cluster", merged.unionByName(singles),
+                       stage="cluster_merge", tag=tag)
         return self.io.read("stage_cluster")

@@ -7,19 +7,26 @@ and writes a new snapshot + lineage, mirroring the reference's
 ``pipeline_job.py`` provides/requires DAG [R] with table semantics:
 ``run(..., from_stage=k)`` skips stages whose snapshot already exists —
 that is the resume path (t5).
+
+Every stage plan is defined once, here. The delta merge
+(plans/incremental.py) calls the same builders and the same write helper
+on its append-only reads; it differs only in input scope, write mode
+(``append=True, tag=...``) and its delta-only steps.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import datagen
 from ..operators import blocking, cluster, encoder, mentions, pairs, scoring
 from ..operators.extract import with_extracted_text
-from ..sources.tableio import TableIO
+from ..sources.tableio import SnapshotInfo, TableIO
 
 STAGES = ["extract", "mention", "block", "pairs", "score", "cluster"]
 
@@ -28,7 +35,7 @@ STAGES = ["extract", "mention", "block", "pairs", "score", "cluster"]
 # ~150 MB built — comfortably inside the 48 GB local driver and any
 # production executor sizing, far under the 8 GB broadcast cap. Above
 # the threshold the shuffle joins (or the bucketed mention layout) take
-# over; the decision input is the snapshot manifest's row count, not a
+# over; the decision input is the manifest's live chain row count, not a
 # planner size estimate.
 BROADCAST_MENTIONS_MAX_ROWS = 500_000
 
@@ -37,6 +44,16 @@ BROADCAST_MENTIONS_MAX_ROWS = 500_000
 # everything downstream consumers touch, and nothing they don't. The
 # context columns exist only between detect_mentions and the encoder UDF.
 MENTION_TABLE_COLS = ["mention_id", "url", "begin", "end", "surface", "vec"]
+
+
+def extract_plan(pages: DataFrame) -> DataFrame:
+    """E1 extraction of already-filtered pages -> (url, warc_ts, text,
+    lang). Filters must run BEFORE this (pushdown doesn't cross the Arrow
+    boundary, §4 X10); the raw ``text``/``html`` columns leave here, so no
+    exchange after it carries them."""
+    return with_extracted_text(
+        pages.select("url", "warc_ts", "html", "lang")
+    ).select("url", "warc_ts", F.col("text_extracted").alias("text"), "lang")
 
 
 class ERPipeline:
@@ -49,34 +66,18 @@ class ERPipeline:
         block_contract: bool = True,
     ):
         """``bucket_mentions``: write stage_mention hash-bucketed on
-        mention_id into this many buckets (TableIO bucket_by). The pair
-        and score stages join mentions on mention_id twice
-        (pairs.attach_features) — with a bucketed layout those joins
-        read straight into sort-merge joins with no exchange on the
-        corpus-sized side. Off by default in the sandbox (bucket count
-        is a cluster-sizing decision: ~corpus_bytes / 1 GB at 100 TB);
-        exercised by tests/test_pipeline.py.
+        mention_id into this many buckets (TableIO bucket_by), so the two
+        mention_id joins of pairs.attach_features read into sort-merge
+        joins with no exchange on the corpus-sized side. Off by default
+        (the bucket count is a cluster-sizing decision).
 
         ``block_contract``: carry the blocking key onto the match-edge
-        table and group-contract each block's matched subgraph in the
-        CC init (cluster.connected_components(contract_by=)) — the
-        LS/SS loop then iterates over ~#(node, block) star edges
-        instead of the full ~degree-dense match graph. Same cluster
-        table (equality-tested). Default ON since r7 on interleaved
-        same-tree A/B evidence at the 16.4M-edge scale (the regime
-        where the flag has any effect at all — below the
-        LOCAL_CC_MAX_EDGES cutover the exact single-task solve runs
-        either way): cluster stage 58.2/78.8 s (off) vs 39.4/48.7 s
-        (on), CC-loop input 16.41M -> 1.45M edges (11.3x), rows_out
-        identical in all four runs (OPTIMIZATION_r07.md; r6's 400k
-        probe measured the same ratios). The r6 Phase H/I scaling
-        criterion was measured contraction-off on the r6 build; the r7
-        cluster dataflow changed regardless (local-solve cutover), and
-        contraction strictly shrinks every LS/SS iteration's shuffle,
-        so the 1->4-core communication pattern is not degraded — see
-        BASELINE.md r7 note. Disable via block_contract=False /
-        SPARK_GRAFT_BLOCK_CONTRACT=0; a warehouse must use the SAME
-        setting for base and delta runs (schema homogeneity)."""
+        table and group-contract each block's matched subgraph in the CC
+        init (cluster.connected_components(contract_by=)). Same cluster
+        table either way (equality-tested); the measurements behind the
+        default are in BASELINE.md (r7). The delta merge reads the
+        setting from the stored stage_score schema, so a warehouse's
+        base and delta snapshots always agree."""
         self.spark = spark
         self.io = io
         self.max_block = max_block
@@ -84,140 +85,137 @@ class ERPipeline:
         self.block_contract = block_contract
         self.timings: dict[str, float] = {}
 
-    # each stage: read prev snapshot -> transform -> write snapshot
-    def stage_extract(self, pages: DataFrame) -> None:
-        """P1 filter + E1 extraction + J7 as-of. Filters run BEFORE the
-        UDF (pushdown doesn't cross the Arrow boundary, §4 X10).
+    # -- shared by the batch stages and the delta merge --------------------
+    @contextmanager
+    def timed(self, s: str):
+        """Record stage ``s``'s wall time in ``timings``."""
+        t0 = time.time()
+        yield
+        self.timings[s] = time.time() - t0
 
-        r7 reorder (guide §2.3): the extractor UDF now runs BEFORE the
-        as-of window, and the raw ``text``/``html`` columns are projected
-        away pre-exchange — so the url shuffle carries
-        (url, warc_ts, extracted, lang) instead of (url, warc_ts, html,
-        text, lang): ~2.5x fewer exchange bytes at every scale, and the
-        Python extractor runs at the SOURCE's parallelism instead of the
-        post-shuffle width. Cost: stale url snapshots (~5% of rows) are
-        extracted and then discarded by the window — per-row
-        deterministic, so selecting latest-then-extract and
-        extract-then-latest produce identical tables (golden-hash +
+    def write(
+        self, s: str, df: DataFrame, artifact: tuple | None = None, **kw
+    ) -> SnapshotInfo:
+        """The one snapshot write of stage ``s`` (table ``stage_<s>``).
+
+        A batch write replaces the table and records the previous stage's
+        latest snapshot as its lineage input. A delta write
+        (``append=True, tag=...``) appends to the chain under the lineage
+        label ``<s>_delta``; its includes chain and tag are its
+        provenance. ``stage=`` overrides the label.
+
+        ``artifact=(table, df)`` writes the stage's small side table
+        (frozen IDF, salt moduli) in the same mode, concurrently: the two
+        writes are independent, so the tiny job back-fills executor slots
+        while the stage-sized write runs (guide §2.6)."""
+        append = kw.get("append", False)
+        label = kw.pop("stage", None) or (f"{s}_delta" if append else s)
+        i = STAGES.index(s)
+        inputs = (
+            [self.io.latest_snapshot(f"stage_{STAGES[i - 1]}")]
+            if i and not append
+            else None
+        )
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            side = artifact and pool.submit(
+                self.io.write, artifact[1], artifact[0],
+                stage=f"{artifact[0]}_delta" if append else artifact[0],
+                append=append, tag=kw.get("tag"),
+            )
+            snap = self.io.write(df, f"stage_{s}", stage=label,
+                                 inputs=inputs, **kw)
+            if side:
+                side.result()
+        return snap
+
+    def _broadcast_mentions(self) -> bool:
+        """Join strategy from the manifest (guide §3.1): the live
+        stage_mention chain — every row a read returns, base plus delta
+        appends — decides whether the mention side broadcasts."""
+        return self.io.chain_rows("stage_mention") <= BROADCAST_MENTIONS_MAX_ROWS
+
+    def mention_plan(self, pages: DataFrame, idf: dict[str, float]) -> DataFrame:
+        """Detected mentions of ``pages`` embedded with ``idf`` (computed
+        by the batch build, the frozen ``model_idf`` artifact on a delta),
+        projected to the persisted MENTION_TABLE_COLS."""
+        m = mentions.detect_mentions(pages, datagen.alias_df(self.spark))
+        embed = encoder.make_encoder_udf(self.spark.sparkContext.broadcast(idf))
+        m = m.withColumn("vec", embed(F.col("ctx_left"), F.col("ctx_right")))
+        return m.select(*MENTION_TABLE_COLS)
+
+    def block(
+        self, m: DataFrame, frozen_salts: DataFrame | None = None, **kw
+    ) -> SnapshotInfo:
+        """Block stage over mentions ``m``: capped block keys + the salt
+        moduli artifact. ``frozen_salts`` (a delta) keeps the stored
+        moduli so delta mentions of a known entity land in the buckets of
+        its base mentions; only entities absent from it get new moduli,
+        appended so the next delta freezes them too. The cap's drop count
+        rides the keys write pass into the lineage (Observation)."""
+        cand = mentions.candidate_entities(m, datagen.alias_df(self.spark))
+        salts = new_salts = blocking.entity_salts(cand, self.max_block)
+        if frozen_salts is not None:
+            new_salts = salts.join(
+                frozen_salts.select("entity_id"), "entity_id", "anti"
+            )
+            salts = frozen_salts.unionByName(new_salts)
+        obs = Observation()
+        keys = blocking.block_keys(
+            m, cand, max_block=self.max_block, salts=salts, observation=obs
+        )
+        return self.write("block", keys, artifact=("block_salts", new_salts),
+                          metrics=obs, **kw)
+
+    def score(self, p: DataFrame, m: DataFrame, **kw) -> SnapshotInfo:
+        """Score stage: features of pairs ``p`` from mentions ``m``, the
+        frozen match decision, and the match-edge table."""
+        feat = pairs.attach_features(
+            p, m, broadcast_mentions=self._broadcast_mentions()
+        )
+        scored = scoring.score_pairs(feat, datagen.alias_df(self.spark))
+        keep = ("block_key",) if self.block_contract else ()
+        return self.write("score", scoring.match_edges(scored, keep=keep), **kw)
+
+    # -- batch stages: read prev snapshot -> transform -> write snapshot ----
+    def stage_extract(self, pages: DataFrame) -> None:
+        """P1 filter + E1 extraction + J7 as-of. The extractor runs before
+        the as-of window: it is per-row deterministic, so
+        extract-then-latest equals latest-then-extract (golden-hash and
         er_extract_hashes gated)."""
-        eng = mentions.english_pages(pages).select(
-            "url", "warc_ts", "html", "lang"
-        )
-        extracted = with_extracted_text(eng).select(
-            "url", "warc_ts", F.col("text_extracted").alias("text"), "lang"
-        )
-        latest = mentions.latest_snapshot(extracted)
-        self.io.write(latest, "stage_extract", stage="extract")
+        self.write("extract", mentions.latest_snapshot(
+            extract_plan(mentions.english_pages(pages))
+        ))
 
     def stage_mention(self) -> None:
         pages = self.io.read("stage_extract")
-        aliases = datagen.alias_df(self.spark)
-        m = mentions.detect_mentions(pages, aliases)
         idf = encoder.compute_idf(self.spark, pages, "text")
-        idf_bc = self.spark.sparkContext.broadcast(idf)
-        embed = encoder.make_encoder_udf(idf_bc)
-        m = m.withColumn("vec", embed(F.col("ctx_left"), F.col("ctx_right")))
-        # project the context columns OUT of the persisted table (r7,
-        # guide §2.3/§6): ctx/ctx_left/ctx_right are consumed entirely
-        # pre-write (the encoder UDF above); no downstream stage or
-        # export reads them, so writing ~320 chars/row of context was
-        # pure write+scan bytes. MENTION_TABLE_COLS is shared with the
-        # incremental delta write so base+delta chains stay
-        # schema-homogeneous.
-        m = m.select(*MENTION_TABLE_COLS)
-        bucket = (
-            (["mention_id"], self.bucket_mentions)
-            if self.bucket_mentions
-            else None
-        )
-        # persist the frozen encoder artifact: delta runs must embed with
-        # the BASE corpus's IDF or their vectors drift vs stored ones
-        # (plans/incremental.py reads this back). Bounded table —
-        # compute_idf caps the vocabulary.
-        # driver-local bounded table: ONE slice -> ONE output file (r7,
-        # guide §6 — the default-parallelism createDataFrame wrote 32
-        # near-empty files per run, each costing a write task + a footer
-        # read). parallelize(..., 1), NOT coalesce(1): coalescing a
-        # 32-slice local relation measured 6.2 s/write vs 0.46 s for a
-        # single-slice parallelize (the one merged task re-walks every
-        # pickled slice).
+        # the frozen encoder artifact: delta runs embed with the BASE
+        # corpus's IDF or their vectors drift vs stored ones. Bounded
+        # (compute_idf caps the vocabulary) and driver-local: ONE slice ->
+        # ONE output file — parallelize(..., 1), not coalesce(1)
+        # (BASELINE.md r7).
         idf_df = self.spark.createDataFrame(
             self.spark.sparkContext.parallelize(
                 list(idf.items()) or [("", 0.0)], 1
             ),
             "tok string, idf double",
         )
-        # overlap the two INDEPENDENT writes (different tables — guide
-        # §2.6: actions are only sequential because driver code calls
-        # them sequentially): the tiny model_idf job back-fills executor
-        # slots while the corpus-sized mention write runs.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(self.io.write, idf_df, "model_idf",
-                              stage="model_idf")
-            self.io.write(m, "stage_mention", stage="mention",
-                          inputs=[self.io.latest_snapshot("stage_extract")],
-                          bucket_by=bucket)
-            fut.result()
+        bucket = (
+            (["mention_id"], self.bucket_mentions)
+            if self.bucket_mentions
+            else None
+        )
+        self.write("mention", self.mention_plan(pages, idf),
+                   artifact=("model_idf", idf_df), bucket_by=bucket)
 
     def stage_block(self) -> None:
-        m = self.io.read("stage_mention")
-        aliases = datagen.alias_df(self.spark)
-        cand = mentions.candidate_entities(m, aliases)
-        # persist the frozen salt moduli (blocking artifact): delta
-        # mentions must salt with the base moduli to land in the same
-        # buckets as base mentions of the same entity.
-        salts = blocking.entity_salts(cand, self.max_block)
-        # the block-size cap trades recall; its drop count rides the
-        # SAME write pass (Observation) into the stage's lineage rows so
-        # the trade is auditable after the run (VERDICT r5 #8)
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        # the keys plan salts with the SAME deterministic moduli the
-        # artifact write persists (entity_salts is a plain groupBy —
-        # identical values recomputed), so the two writes are
-        # independent and overlap (guide §2.6); delta runs still read
-        # the persisted artifact.
-        keys = blocking.block_keys(
-            m, cand, max_block=self.max_block,
-            salts=salts, observation=obs,
-        )
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(self.io.write, salts, "block_salts",
-                              stage="block_salts")
-            self.io.write(keys, "stage_block", stage="block",
-                          inputs=[self.io.latest_snapshot("stage_mention")],
-                          metrics=obs)
-            fut.result()
+        self.block(self.io.read("stage_mention"))
 
     def stage_pairs(self) -> None:
-        keys = self.io.read("stage_block")
-        p = pairs.within_block_pairs(keys)
-        self.io.write(p, "stage_pairs", stage="pairs",
-                      inputs=[self.io.latest_snapshot("stage_block")])
+        self.write("pairs", pairs.within_block_pairs(self.io.read("stage_block")))
 
     def stage_score(self) -> None:
-        p = self.io.read("stage_pairs")
-        m = self.io.read("stage_mention")
-        aliases = datagen.alias_df(self.spark)
-        # manifest row count decides the join strategy for free (guide
-        # §3.1): under the threshold the mention-feature table broadcasts
-        # and the vec-carrying pair table is never shuffled; above it the
-        # planner keeps the shuffle joins (or the bucketed layout when
-        # bucket_mentions is set).
-        m_rows = self.io.snapshot_entry("stage_mention")["rows"]
-        feat = pairs.attach_features(
-            p, m, broadcast_mentions=m_rows <= BROADCAST_MENTIONS_MAX_ROWS
-        )
-        scored = scoring.score_pairs(feat, aliases)
-        keep = ("block_key",) if self.block_contract else ()
-        edges = scoring.match_edges(scored, keep=keep)
-        self.io.write(edges, "stage_score", stage="score",
-                      inputs=[self.io.latest_snapshot("stage_pairs")])
+        self.score(self.io.read("stage_pairs"), self.io.read("stage_mention"))
 
     def stage_cluster(
         self,
@@ -243,9 +241,6 @@ class ERPipeline:
         score_snap = self.io.latest_snapshot("stage_score")
         edges = self.io.read("stage_score")
         m = self.io.read("stage_mention")
-        # manifest row count of stage_score == edge count: sizes the CC
-        # frontier partitioning for free (no count() job, no 64-part clamp)
-        n_edges = self.io.snapshot_entry("stage_score")["rows"]
 
         per_iter = None
         if durable_iterations:
@@ -261,17 +256,17 @@ class ERPipeline:
                 start = self.io.read("cc_frontier")
             # else: stale frontier (stage_score moved on, or a pre-lineage
             # frontier with no recorded inputs) — fall back to a fresh run
+        # the live chain's row count == the edges the read returns: sizes
+        # the CC frontier and picks the local solve for free (no count job)
         comp = cluster.connected_components(
             edges, on_iteration=per_iter, start_frontier=start,
-            n_edges=n_edges,
+            n_edges=self.io.chain_rows("stage_score"),
             contract_by="block_key" if self.block_contract else None,
         )
         # comp has one row per edge-incident mention, so it is bounded by
-        # the mention count — manifest-known (guide §3.1): broadcast it
-        # into the left join while it fits and the mention-id side is
-        # never shuffled; above the threshold the planner keeps SMJ.
-        m_rows = self.io.snapshot_entry("stage_mention")["rows"]
-        if m_rows <= BROADCAST_MENTIONS_MAX_ROWS:
+        # the mention count: broadcast it into the left join while the
+        # mentions fit and the mention-id side is never shuffled
+        if self._broadcast_mentions():
             comp = F.broadcast(comp)
         clusters = (
             m.select("mention_id")
@@ -280,8 +275,7 @@ class ERPipeline:
                 "cluster_id", F.coalesce(F.col("cluster_id"), F.col("mention_id"))
             )
         )
-        self.io.write(clusters, "stage_cluster", stage="cluster",
-                      inputs=[self.io.latest_snapshot("stage_score")])
+        self.write("cluster", clusters)
 
     def run(self, pages: DataFrame | None = None, from_stage: str = "extract",
             to_stage: str = "cluster") -> DataFrame:
@@ -289,11 +283,10 @@ class ERPipeline:
         have snapshots (resume contract, t5)."""
         i0, i1 = STAGES.index(from_stage), STAGES.index(to_stage)
         for s in STAGES[i0 : i1 + 1]:
-            t0 = time.time()
-            if s == "extract":
-                assert pages is not None, "extract stage needs the pages DataFrame"
-                self.stage_extract(pages)
-            else:
-                getattr(self, f"stage_{s}")()
-            self.timings[s] = time.time() - t0
+            with self.timed(s):
+                if s == "extract":
+                    assert pages is not None, "extract stage needs the pages DataFrame"
+                    self.stage_extract(pages)
+                else:
+                    getattr(self, f"stage_{s}")()
         return self.io.read(f"stage_{to_stage}")

@@ -329,18 +329,22 @@ class TableIO:
         view `read` resolves) — driver-side manifest arithmetic, no Spark
         job. For append chains each entry's `rows` counts only its own
         files, so the live total is the sum over the chain; replace-style
-        snapshots have no `includes` and return their own count."""
+        snapshots have no `includes` and return their own count. Each
+        snapshot counts once, so a diamond-shaped include graph does not
+        double-count its shared ancestor and a cyclic one terminates."""
         snap = snapshot_id or self.latest_snapshot(table)
         if snap is None:
             raise FileNotFoundError(f"table {table} has no complete snapshot")
         by_id = {
             s["snapshot_id"]: s for s in self._load_manifest(table)["snapshots"]
         }
-        total, todo = 0, [snap]
+        total, todo, seen = 0, [snap], set()
         while todo:
-            s = by_id.get(todo.pop())
-            if s is None:
+            sid = todo.pop()
+            s = by_id.get(sid)
+            if s is None or sid in seen:
                 continue
+            seen.add(sid)
             total += int(s.get("rows", 0))
             todo.extend(s.get("includes", []))
         return total

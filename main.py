@@ -59,8 +59,9 @@ def main() -> None:
         default=os.environ.get("SPARK_GRAFT_BLOCK_CONTRACT", "1") != "0",
         help="carry the blocking key onto the match edges and "
         "group-contract each block's matched subgraph in the CC init "
-        "(ERPipeline block_contract; default ON since r7 — disable "
-        "with --no-block-contract or SPARK_GRAFT_BLOCK_CONTRACT=0)",
+        "(ERPipeline block_contract; default ON — disable with "
+        "--no-block-contract or SPARK_GRAFT_BLOCK_CONTRACT=0). Batch "
+        "stages only: merge-delta follows the stored stage_score schema",
     )
     ap.add_argument("--make-zip", default=None, metavar="PATH")
     args = ap.parse_args()
@@ -111,12 +112,9 @@ def main() -> None:
 
         start = args.delta_start if args.delta_start is not None else args.n_pages
         delta = datagen.gen_pages_df(spark, args.n_pages, start=start)
-        # forward block_contract (ADVICE r6): a base built with the flag
-        # carries block_key on stage_score; a delta merge constructed
-        # without it would append schema-heterogeneous snapshots whose
-        # chain reads silently drop/null the column
-        inc = IncrementalER(spark, io, max_block=args.max_block,
-                            block_contract=args.block_contract)
+        # the delta carries block_key exactly when the stored stage_score
+        # does (IncrementalER reads it from the schema)
+        inc = IncrementalER(spark, io, max_block=args.max_block)
         out = inc.merge(delta)
         pipe = inc  # stage_sec reporting below reads .timings
     elif args.stage == "all":

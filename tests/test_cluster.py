@@ -96,33 +96,6 @@ def test_hash_to_min_kernel():
     assert m[7_000_000_000] == m[6_999_999_999] == 6_999_999_999
 
 
-def test_cc_contract_equality(spark):
-    """The contraction pre-pass must land on exactly the uncontracted
-    loop's fixpoint — random graph AND a long chain whose edges are
-    scattered across partitions (the contraction's hard case: local
-    views see disjoint chain fragments)."""
-    rng = random.Random(7)
-    n = 300
-    rand_edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(220)]
-    rand_edges = [(u, v) for u, v in rand_edges if u != v]
-    chain_edges = [(i, i + 1) for i in range(500)]
-    rng.shuffle(chain_edges)
-    for edges in (rand_edges, chain_edges):
-        df = spark.createDataFrame(
-            [(int(u), int(v), 1.0) for u, v in edges],
-            "src long, dst long, score double",
-        ).repartition(8)
-        with_c = {
-            r["mention_id"]: r["cluster_id"]
-            for r in connected_components(df, local_contract=True).collect()
-        }
-        without_c = {
-            r["mention_id"]: r["cluster_id"]
-            for r in connected_components(df, local_contract=False).collect()
-        }
-        assert with_c == without_c
-
-
 def test_cc_block_contract_equality(spark):
     """contract_by groups the contraction by an edge column (the blocking
     key): same fixpoint as the plain loop on (a) clique-per-block edges —

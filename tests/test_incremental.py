@@ -142,6 +142,57 @@ def test_delta_appends_are_delta_sized(spark, incr_run):
     assert 0 < delta_rows < man_rows
 
 
+def test_block_delta_lineage_carries_cap_metrics(spark, incr_run):
+    """The delta runs the batch block plan with the same Observation: its
+    block_delta lineage rows carry the cap-drop counters too."""
+    import json
+
+    io, _, _, _ = incr_run
+    lin = io.read_lineage().filter(F.col("stage") == "block_delta")
+    m = json.loads(lin.select("metrics").first()["metrics"])
+    assert set(m) == {"rows_dropped_by_cap", "rows_pre_cap"}
+    assert m["rows_pre_cap"] > 0
+    assert 0 <= m["rows_dropped_by_cap"] <= m["rows_pre_cap"]
+
+
+def test_score_broadcast_reads_live_chain_rows(spark, incr_run, tmp_path, monkeypatch):
+    """The mention-broadcast decision reads the live stage_mention chain,
+    not the latest (delta) entry's own rows: with the threshold between
+    the two, a re-run stage_score must not broadcast mentions. Runs on a
+    copy of the merged warehouse; the control run above the chain total
+    does broadcast (the check discriminates)."""
+    import shutil
+
+    from entity_knowledge_in_bert_spark.plans import pipeline as P
+    from entity_knowledge_in_bert_spark.sources.tableio import TableIO
+
+    io, _, _, _ = incr_run
+    wh = str(tmp_path / "wh")
+    shutil.copytree(io.warehouse, wh)
+    cio = TableIO(spark, wh)
+    delta_rows = cio.snapshot_entry("stage_mention")["rows"]
+    total = cio.chain_rows("stage_mention")
+    assert delta_rows < total
+
+    plans = []
+    write = cio.write
+
+    def spy(df, table, **kw):
+        if table == "stage_score":
+            plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return write(df, table, **kw)
+
+    cio.write = spy
+
+    def broadcast_hints(threshold):
+        monkeypatch.setattr(P, "BROADCAST_MENTIONS_MAX_ROWS", threshold)
+        P.ERPipeline(spark, cio).stage_score()
+        return plans[-1].count("strategy=broadcast")
+
+    # both pair joins lose their mention-side hint below the chain total
+    assert broadcast_hints((delta_rows + total) // 2) == broadcast_hints(total) - 2
+
+
 @pytest.mark.parametrize("mod", [2, 3, 5])
 def test_merge_equals_batch_random_splits(spark, mod):
     """Hash-split a 60-edge graph into base/delta at several ratios; the

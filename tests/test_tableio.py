@@ -61,6 +61,26 @@ def test_append_chain(spark, io):
     assert io.read("t6").count() == 18
 
 
+def test_chain_rows_counts_each_snapshot_once(tmp_path):
+    """Manifest-only, no Spark job: a diamond-shaped include graph counts
+    its shared ancestor once, and a cyclic one terminates."""
+    io = TableIO(None, str(tmp_path / "wh"))
+
+    def snap(sid, rows, *includes):
+        return {"snapshot_id": sid, "rows": rows, "complete": True,
+                "includes": list(includes)}
+
+    io._save_manifest("diamond", {"table": "diamond", "snapshots": [
+        snap("a", 1), snap("b", 10, "a"), snap("c", 100, "a"),
+        snap("d", 1000, "b", "c"),
+    ]})
+    assert io.chain_rows("diamond") == 1111
+    io._save_manifest("cycle", {"table": "cycle", "snapshots": [
+        snap("x", 1, "y"), snap("y", 10, "x"),
+    ]})
+    assert io.chain_rows("cycle") == 11
+
+
 def test_bucketed_join_has_no_exchange(spark, io):
     """bucket_by snapshots: an equi-join on the bucket column planned as
     a sort-merge join needs NO exchange and NO sort on either side —
