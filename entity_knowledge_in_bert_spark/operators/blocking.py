@@ -151,7 +151,6 @@ def sized_block_keys(
     mentions: DataFrame,
     candidates: DataFrame,
     max_block: int = DEFAULT_MAX_BLOCK,
-    use_lsh: bool = True,
     salts: DataFrame | None = None,
 ) -> DataFrame:
     """PRE-cap (mention_id, block_key, _bsize), distinct. Dedup + size
@@ -164,9 +163,9 @@ def sized_block_keys(
     on block_key for the window — a full extra shuffle of the key set."""
     from pyspark.sql import Window
 
-    keys = entity_salted_keys(candidates, max_block, salts=salts)
-    if use_lsh:
-        keys = keys.unionByName(lsh_band_keys(mentions))
+    keys = entity_salted_keys(candidates, max_block, salts=salts).unionByName(
+        lsh_band_keys(mentions)
+    )
     w = Window.partitionBy("block_key")
     return (
         keys.repartition("block_key")
@@ -179,13 +178,11 @@ def block_keys(
     mentions: DataFrame,
     candidates: DataFrame,
     max_block: int = DEFAULT_MAX_BLOCK,
-    use_lsh: bool = True,
-    cap_factor: int = CAP_FACTOR,
     salts: DataFrame | None = None,
     observation=None,
 ) -> DataFrame:
     """Union of both key families; keys with more than
-    ``cap_factor * max_block`` members are dropped (see module docstring
+    ``CAP_FACTOR * max_block`` members are dropped (see module docstring
     — audit the drop with ``block_audit``, which sees pre-cap sizes).
 
     ``observation`` (a ``pyspark.sql.Observation``) makes the recall
@@ -196,11 +193,9 @@ def block_keys(
 
     Returns (mention_id, block_key), distinct.
     """
-    sized = sized_block_keys(
-        mentions, candidates, max_block, use_lsh, salts=salts
-    )
+    sized = sized_block_keys(mentions, candidates, max_block, salts=salts)
+    cap = F.lit(max_block * CAP_FACTOR)
     if observation is not None:
-        cap = F.lit(max_block * cap_factor)
         sized = sized.observe(
             observation,
             # coalesce: SUM over an empty plan is NULL, which would land
@@ -213,21 +208,16 @@ def block_keys(
             ).alias("rows_dropped_by_cap"),
             F.count(F.lit(1)).alias("rows_pre_cap"),
         )
-    return (
-        sized
-        .filter(F.col("_bsize") <= F.lit(max_block * cap_factor))
-        .drop("_bsize")
-    )
+    return sized.filter(F.col("_bsize") <= cap).drop("_bsize")
 
 
 def cap_by_size(
     keys: DataFrame,
     max_block: int = DEFAULT_MAX_BLOCK,
-    cap_factor: int = CAP_FACTOR,
 ) -> DataFrame:
     """Re-apply the block-size cap to an ALREADY-MATERIALIZED key set
     (mention_id, block_key): drop every key whose population exceeds
-    ``cap_factor * max_block``. The incremental plan uses this over the
+    ``CAP_FACTOR * max_block``. The incremental plan uses this over the
     unioned base+delta keys, so a block that grew past the cap across
     deltas stops generating pairs exactly as a batch rebuild would drop
     it (ADVICE r2: delta-only capping let touched blocks grow without
@@ -238,7 +228,7 @@ def cap_by_size(
     w = Window.partitionBy("block_key")
     return (
         keys.withColumn("_bsize", F.count("*").over(w))
-        .filter(F.col("_bsize") <= F.lit(max_block * cap_factor))
+        .filter(F.col("_bsize") <= F.lit(max_block * CAP_FACTOR))
         .drop("_bsize")
     )
 
@@ -247,20 +237,18 @@ def block_audit(
     mentions: DataFrame,
     candidates: DataFrame,
     max_block: int = DEFAULT_MAX_BLOCK,
-    use_lsh: bool = True,
-    cap_factor: int = CAP_FACTOR,
 ) -> DataFrame:
     """PRE-cap block-size histogram with the cap decision made visible:
     (block_size, n_blocks, dropped). Every key block_keys() silently
     removes shows up here with dropped = true."""
-    sized = sized_block_keys(mentions, candidates, max_block, use_lsh)
+    sized = sized_block_keys(mentions, candidates, max_block)
     return (
         sized.groupBy("block_key")
         .agg(F.first("_bsize").alias("block_size"))
         .groupBy("block_size")
         .agg(F.count("*").alias("n_blocks"))
         .withColumn(
-            "dropped", F.col("block_size") > F.lit(max_block * cap_factor)
+            "dropped", F.col("block_size") > F.lit(max_block * CAP_FACTOR)
         )
         .orderBy("block_size")
     )

@@ -225,8 +225,7 @@ def _contract_partitions(canon: DataFrame) -> DataFrame:
 # comfortably inside a single task at any sane executor sizing. Above
 # the threshold (every realistic production frontier) the distributed
 # LS/SS loop runs unchanged; equality of the two paths is test-gated
-# (test_cc_local_solve_equality). Overridable for experiments via
-# SPARK_GRAFT_LOCAL_CC_EDGES.
+# (test_cc_local_solve_equality).
 LOCAL_CC_MAX_EDGES = 4_000_000
 
 
@@ -352,16 +351,11 @@ def connected_components(
     # that size. Only on the fresh-edges path with no per-iteration
     # observer: durable iterations and frontier resumes are loop
     # contracts.
-    import os as _os
-
-    local_max = int(
-        _os.environ.get("SPARK_GRAFT_LOCAL_CC_EDGES", LOCAL_CC_MAX_EDGES)
-    )
     if (
         start_frontier is None
         and on_iteration is None
         and n_edges is not None
-        and 0 <= n_edges <= local_max
+        and 0 <= n_edges <= LOCAL_CC_MAX_EDGES
     ):
         return _solve_local(edges)
 

@@ -26,21 +26,19 @@ CTX_CHARS = 80  # context window (chars) each side, surface masked out
 def latest_snapshot(pages: DataFrame) -> DataFrame:
     """J7/W2 as-of dedup: keep the newest warc_ts per url.
 
-    r7 (guide §2.3 — aggregate before you shuffle): ``max_by`` aggregation
-    instead of the row_number window. Same one exchange on url, but the
-    hash aggregate does PARTIAL map-side reduction (duplicate snapshots
-    of a url never cross the wire — on a real crawl most urls have many)
-    and needs no per-partition sort, where the window formulation shipped
-    every snapshot and sorted each partition. Row-identical for inputs
-    whose (url, warc_ts) pairs are unique per url (both formulations pick
-    an arbitrary-but-consistent row on exact-ts ties) — equality-pinned
-    in tests/test_mentions.py and by the er_extract_hashes oracle.
+    A ``max_by`` aggregation (partial map-side reduction: duplicate
+    snapshots of a url never cross the wire; BASELINE.md r7). The order
+    key is ``struct(warc_ts, xxhash64(<columns>))``: a NULL ``warc_ts``
+    loses to any real one, a url whose ``warc_ts`` is always NULL keeps
+    one of its real rows, and exact-timestamp ties resolve by the 8-byte
+    row hash — the same row under any input order or partitioning.
+    Row-identical to the row_number window where (url, warc_ts) is
+    unique (tests/test_mentions.py, er_extract_hashes oracle).
     """
     others = [c for c in pages.columns if c != "url"]
+    order = F.struct(F.col("warc_ts"), F.xxhash64(*others))
     agg = pages.groupBy("url").agg(
-        F.max_by(F.struct(*[F.col(c) for c in others]), F.col("warc_ts")).alias(
-            "_r"
-        )
+        F.max_by(F.struct(*[F.col(c) for c in others]), order).alias("_r")
     )
     return agg.select(
         *[

@@ -34,9 +34,8 @@ STAGES = ["extract", "mention", "block", "pairs", "score", "cluster"]
 # (guide §3.1): ~300 B/row (surface + 64-float vec) => 500k rows is
 # ~150 MB built — comfortably inside the 48 GB local driver and any
 # production executor sizing, far under the 8 GB broadcast cap. Above
-# the threshold the shuffle joins (or the bucketed mention layout) take
-# over; the decision input is the manifest's live chain row count, not a
-# planner size estimate.
+# the threshold the shuffle joins take over; the decision input is the
+# manifest's live chain row count, not a planner size estimate.
 BROADCAST_MENTIONS_MAX_ROWS = 500_000
 
 # persisted stage_mention schema (batch AND delta writes — a chain read
@@ -62,16 +61,9 @@ class ERPipeline:
         spark: SparkSession,
         io: TableIO,
         max_block: int = 64,
-        bucket_mentions: int | None = None,
         block_contract: bool = True,
     ):
-        """``bucket_mentions``: write stage_mention hash-bucketed on
-        mention_id into this many buckets (TableIO bucket_by), so the two
-        mention_id joins of pairs.attach_features read into sort-merge
-        joins with no exchange on the corpus-sized side. Off by default
-        (the bucket count is a cluster-sizing decision).
-
-        ``block_contract``: carry the blocking key onto the match-edge
+        """``block_contract``: carry the blocking key onto the match-edge
         table and group-contract each block's matched subgraph in the CC
         init (cluster.connected_components(contract_by=)). Same cluster
         table either way (equality-tested); the measurements behind the
@@ -81,7 +73,6 @@ class ERPipeline:
         self.spark = spark
         self.io = io
         self.max_block = max_block
-        self.bucket_mentions = bucket_mentions
         self.block_contract = block_contract
         self.timings: dict[str, float] = {}
 
@@ -200,13 +191,8 @@ class ERPipeline:
             ),
             "tok string, idf double",
         )
-        bucket = (
-            (["mention_id"], self.bucket_mentions)
-            if self.bucket_mentions
-            else None
-        )
         self.write("mention", self.mention_plan(pages, idf),
-                   artifact=("model_idf", idf_df), bucket_by=bucket)
+                   artifact=("model_idf", idf_df))
 
     def stage_block(self) -> None:
         self.block(self.io.read("stage_mention"))

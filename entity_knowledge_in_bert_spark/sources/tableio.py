@@ -29,7 +29,6 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -96,9 +95,7 @@ class TableIO:
         stage: str | None = None,
         run_id: str | None = None,
         inputs: list | None = None,
-        partition_by: list[str] | None = None,
         append: bool = False,
-        bucket_by: tuple[list[str], int] | None = None,
         tag: str | None = None,
         metrics=None,
         entry_extra: dict | None = None,
@@ -114,17 +111,6 @@ class TableIO:
         incremental path (plans/incremental.py) write O(delta), not
         O(corpus).
 
-        ``bucket_by=([cols], n)`` writes the snapshot as a BUCKETED table
-        (hash-clustered on cols into n buckets, sorted within buckets).
-        A later equi-join on the bucket columns reads the layout straight
-        into a sort-merge join with NO exchange and no sort on this side
-        — at 100 TB that deletes a full-corpus shuffle per consumer
-        (e.g. stage_mention is joined on mention_id twice by
-        attach_features). Catalog-table write; on the in-memory catalog
-        the bucketing spec lives for the session and the parquet files
-        remain readable forever (a Hive/Iceberg catalog persists the
-        spec). Mutually exclusive with append/partition_by.
-
         ``tag`` labels the snapshot with a caller token so a group of
         writes (e.g. one streaming micro-batch merge) can be rolled back
         atomically via :meth:`rollback_tag` — the exactly-once mechanism
@@ -137,17 +123,6 @@ class TableIO:
         dict, or a ``pyspark.sql.Observation`` attached to ``df``'s plan
         — the write action itself materializes the observed metrics, so
         reading it here costs no extra job."""
-        if bucket_by is not None and (append or partition_by):
-            raise ValueError("bucket_by excludes append/partition_by")
-        if bucket_by is not None and self.catalog and len(bucket_by[0]) > 1:
-            # Iceberg's bucket transform is single-column; a multi-column
-            # spec would silently produce a DIFFERENT layout than the
-            # parquet backend's joint bucketBy(cols...) hash.
-            raise ValueError(
-                "multi-column bucket_by is not supported on the Iceberg "
-                "backend (bucket transform hashes one column); bucket on "
-                "a single column or use the parquet backend"
-            )
         import pyarrow.parquet as pq
 
         manifest = self._load_manifest(table)
@@ -157,13 +132,6 @@ class TableIO:
             # table metadata, so time travel by the recorded id works.
             ident = self._ident(table)
             w = df.writeTo(ident).using("iceberg")
-            if partition_by:
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            if bucket_by:
-                cols, n = bucket_by
-                # Iceberg bucket partition transform — same co-located
-                # join layout the parquet backend gets via bucketBy
-                w = w.partitionedBy(F.bucket(n, cols[0]))
             if append and prior is not None:
                 w.append()
             else:
@@ -188,21 +156,7 @@ class TableIO:
                 f"snap-{len(manifest['snapshots']):04d}-{uuid.uuid4().hex[:8]}"
             )
             path = os.path.join(self.warehouse, table, snap_id)
-            if bucket_by:
-                cols, n = bucket_by
-                bucket_table = f"{table}_{snap_id}".replace("-", "_")
-                (
-                    df.write.mode("overwrite")
-                    .bucketBy(n, *cols)
-                    .sortBy(*cols)
-                    .option("path", path)
-                    .saveAsTable(bucket_table)
-                )
-            else:
-                writer = df.write.mode("overwrite")
-                if partition_by:
-                    writer = writer.partitionBy(*partition_by)
-                writer.parquet(path)
+            df.write.mode("overwrite").parquet(path)
 
             # ZERO extra Spark jobs: every task of the write job produced
             # one parquet file, so per-partition row counts come straight
@@ -214,9 +168,8 @@ class TableIO:
             from concurrent.futures import ThreadPoolExecutor
 
             files = sorted(
-                os.path.join(dp, f)
-                for dp, _dirs, fs in os.walk(path)
-                for f in fs
+                os.path.join(path, f)
+                for f in os.listdir(path)
                 if f.endswith(".parquet")
             )
             with ThreadPoolExecutor(max_workers=16) as pool:
@@ -247,9 +200,6 @@ class TableIO:
             # parquet backend: record the append chain; Iceberg tracks
             # this in its own snapshot metadata.
             entry["includes"] = [prior]
-        if bucket_by is not None and not self.catalog:
-            entry["bucket_table"] = f"{table}_{snap_id}".replace("-", "_")
-            entry["bucket_by"] = [list(bucket_by[0]), bucket_by[1]]
         manifest["snapshots"].append(entry)
         self._save_manifest(table, manifest)
 
@@ -257,8 +207,6 @@ class TableIO:
             run = run_id or uuid.uuid4().hex[:12]
             # lineage is driver-tiny: write it with pyarrow directly (no
             # Spark job); Spark reads it back fine via read.parquet
-            import json as _json
-
             import pyarrow as pa
 
             # resolve plan metrics AFTER the write action above: an
@@ -277,7 +225,7 @@ class TableIO:
                         # caveat) — record nothing rather than hang/fail
                         # the write
                         mvals = {}
-            metrics_json = _json.dumps(mvals, sort_keys=True, default=str)
+            metrics_json = json.dumps(mvals, sort_keys=True, default=str)
 
             now = int(time.time() * 1_000_000)
             n = max(len(part_counts), 1)
@@ -324,30 +272,42 @@ class TableIO:
     def exists(self, table: str) -> bool:
         return self.latest_snapshot(table) is not None
 
+    def _chain(
+        self, table: str, snapshot_id: str | None = None, manifest: dict | None = None
+    ) -> list[dict]:
+        """Manifest entries of a snapshot's include chain (default: the
+        latest complete snapshot), head first — the snapshots whose files
+        make up its live view (Iceberg manifest-list semantics on the
+        parquet backend). Each snapshot appears once, so a diamond-shaped
+        include graph lists its shared ancestor once and a cyclic one
+        terminates. An id missing from the manifest yields a bare
+        ``{"snapshot_id": id}`` entry: its directory is still read, and it
+        counts no rows."""
+        snap = snapshot_id or self.latest_snapshot(table)
+        if snap is None:
+            raise FileNotFoundError(f"table {table} has no complete snapshot")
+        by_id = {
+            s["snapshot_id"]: s
+            for s in (manifest or self._load_manifest(table))["snapshots"]
+        }
+        chain, todo, seen = [], [snap], set()
+        while todo:
+            sid = todo.pop()
+            if sid in seen:
+                continue
+            seen.add(sid)
+            entry = by_id.get(sid, {"snapshot_id": sid})
+            chain.append(entry)
+            todo.extend(entry.get("includes", []))
+        return chain
+
     def chain_rows(self, table: str, snapshot_id: str | None = None) -> int:
         """Total row count of a snapshot's full include-chain (the live
         view `read` resolves) — driver-side manifest arithmetic, no Spark
         job. For append chains each entry's `rows` counts only its own
         files, so the live total is the sum over the chain; replace-style
-        snapshots have no `includes` and return their own count. Each
-        snapshot counts once, so a diamond-shaped include graph does not
-        double-count its shared ancestor and a cyclic one terminates."""
-        snap = snapshot_id or self.latest_snapshot(table)
-        if snap is None:
-            raise FileNotFoundError(f"table {table} has no complete snapshot")
-        by_id = {
-            s["snapshot_id"]: s for s in self._load_manifest(table)["snapshots"]
-        }
-        total, todo, seen = 0, [snap], set()
-        while todo:
-            sid = todo.pop()
-            s = by_id.get(sid)
-            if s is None or sid in seen:
-                continue
-            seen.add(sid)
-            total += int(s.get("rows", 0))
-            todo.extend(s.get("includes", []))
-        return total
+        snapshots have no `includes` and return their own count."""
+        return sum(int(s.get("rows", 0)) for s in self._chain(table, snapshot_id))
 
     def read(
         self, table: str, snapshot_id: str | None = None, chain: bool = True
@@ -379,26 +339,10 @@ class TableIO:
                 .option("snapshot-id", snap)
                 .load(self._ident(table))
             )
-        by_id = {
-            s["snapshot_id"]: s for s in self._load_manifest(table)["snapshots"]
-        }
-        # bucketed snapshot: read through the catalog so the bucketing
-        # spec reaches the planner (exchange-free joins on the bucket
-        # cols). Fallback to the raw parquet files when the in-memory
-        # catalog of the writing session is gone.
-        bt = by_id.get(snap, {}).get("bucket_table")
-        if bt is not None and self.spark.catalog.tableExists(bt):
-            return self.spark.table(bt)
-        # resolve the append chain: a snapshot's data = its own files
-        # plus everything its `includes` ancestry wrote (Iceberg manifest
-        # -list semantics on the parquet backend)
-        paths, todo = [], [snap]
-        while todo:
-            s = todo.pop()
-            paths.append(os.path.join(self.warehouse, table, s))
-            if chain:
-                todo.extend(by_id.get(s, {}).get("includes", []))
-        return self.spark.read.parquet(*paths)
+        entries = self._chain(table, snap) if chain else [{"snapshot_id": snap}]
+        return self.spark.read.parquet(
+            *(os.path.join(self.warehouse, table, s["snapshot_id"]) for s in entries)
+        )
 
     def compact(
         self, table: str, run_id: str | None = None, prune: bool = False
@@ -442,16 +386,7 @@ class TableIO:
                 "rewrite_data_files + expire_snapshots procedures (not "
                 "available in this sandbox)"
             )
-        manifest = self._load_manifest(table)
-        head = self.latest_snapshot(table)
-        if head is None:
-            raise FileNotFoundError(f"table {table} has no complete snapshot")
-        by_id = {s["snapshot_id"]: s for s in manifest["snapshots"]}
-        chain, todo = [], [head]
-        while todo:
-            s = todo.pop()
-            chain.append(s)
-            todo.extend(by_id.get(s, {}).get("includes", []))
+        chain = self._chain(table)
         if len(chain) == 1:
             return None
         # the guard set must UNION prior compacted entries' folded_tags
@@ -463,15 +398,16 @@ class TableIO:
         # pruning the older carriers is safe.
         folded: set = set()
         for s in chain:
-            if by_id[s].get("tag"):
-                folded.add(by_id[s]["tag"])
-            folded.update(by_id[s].get("folded_tags") or [])
+            if s.get("tag"):
+                folded.add(s["tag"])
+            folded.update(s.get("folded_tags") or [])
         folded_tags = sorted(folded)
         # read the live chain and rewrite it as one snapshot: the write
         # targets a fresh snapshot dir, so inputs are never overwritten.
         # folded_tags ride the SAME manifest commit that publishes the
         # head (entry_extra) — no second save, no crash window between
         # "head exists" and "guard recorded" (ADVICE r6).
+        head = chain[0]["snapshot_id"]
         info = self.write(
             self.read(table),
             table,
@@ -487,11 +423,15 @@ class TableIO:
         if prune:
             import shutil
 
-            chain_set = set(chain)
-            refs: set = set()
-            for s in manifest["snapshots"]:
-                if s["snapshot_id"] not in chain_set:
-                    refs.update(s.get("includes", []))
+            # a snapshot outside the folded chain reads its whole include
+            # chain, so every entry of that chain must survive
+            chain_set = {s["snapshot_id"] for s in chain}
+            refs = {
+                r["snapshot_id"]
+                for s in manifest["snapshots"]
+                if s["snapshot_id"] not in chain_set
+                for r in self._chain(table, s["snapshot_id"], manifest)
+            }
             removable = chain_set - refs
             manifest["snapshots"] = [
                 s
@@ -551,23 +491,25 @@ class TableIO:
             json.dump(rec, f, indent=1)
         os.replace(tmp, p)
 
+    def _manifests(self):
+        """(table, manifest) for every table in the warehouse."""
+        if not os.path.isdir(self.warehouse):
+            return
+        for t in os.listdir(self.warehouse):
+            if os.path.exists(self._manifest_path(t)):
+                yield t, self._load_manifest(t)
+
     def has_tag(self, tag: str) -> bool:
         """Does ANY table manifest hold a snapshot labeled ``tag``?
         True means a prior merge attempt with this tag left partial work
         behind — replaying the merge WITHOUT rolling the tag back would
         append duplicate rows. Manifest bookkeeping is backend-agnostic,
         so this works identically on parquet and Iceberg storage."""
-        if not os.path.isdir(self.warehouse):
-            return False
-        for t in os.listdir(self.warehouse):
-            if not os.path.exists(self._manifest_path(t)):
-                continue
-            if any(
-                s.get("tag") == tag
-                for s in self._load_manifest(t)["snapshots"]
-            ):
-                return True
-        return False
+        return any(
+            s.get("tag") == tag
+            for _, manifest in self._manifests()
+            for s in manifest["snapshots"]
+        )
 
     def try_rollback_tag(self, tag: str, allow_at_least_once: bool = False) -> int:
         """Backend-aware rollback: on the parquet backend, drop the tag's
@@ -622,13 +564,11 @@ class TableIO:
                 "tag rollback on the Iceberg backend requires WAP/branch "
                 "commits (not available in this sandbox)"
             )
-        dropped = 0
-        if not os.path.isdir(self.warehouse):
-            return 0
-        for t in os.listdir(self.warehouse):
-            if not os.path.exists(self._manifest_path(t)):
-                continue
-            for s in self._load_manifest(t)["snapshots"]:
+        # check every table before dropping anything: a folded tag must
+        # leave all manifests untouched
+        manifests = list(self._manifests())
+        for t, manifest in manifests:
+            for s in manifest["snapshots"]:
                 if tag in (s.get("folded_tags") or []):
                     raise RuntimeError(
                         f"tag {tag!r} was folded into compacted snapshot "
@@ -639,11 +579,8 @@ class TableIO:
                         "BEFORE compacting, or restore the table from a "
                         "pre-compaction snapshot id."
                     )
-        for t in os.listdir(self.warehouse):
-            mp = self._manifest_path(t)
-            if not os.path.exists(mp):
-                continue
-            manifest = self._load_manifest(t)
+        dropped = 0
+        for t, manifest in manifests:
             keep = [s for s in manifest["snapshots"] if s.get("tag") != tag]
             if len(keep) != len(manifest["snapshots"]):
                 dropped += len(manifest["snapshots"]) - len(keep)

@@ -56,12 +56,12 @@ def main() -> None:
     ap.add_argument(
         "--block-contract",
         action=argparse.BooleanOptionalAction,
-        default=os.environ.get("SPARK_GRAFT_BLOCK_CONTRACT", "1") != "0",
+        default=True,
         help="carry the blocking key onto the match edges and "
         "group-contract each block's matched subgraph in the CC init "
         "(ERPipeline block_contract; default ON — disable with "
-        "--no-block-contract or SPARK_GRAFT_BLOCK_CONTRACT=0). Batch "
-        "stages only: merge-delta follows the stored stage_score schema",
+        "--no-block-contract). Batch stages only: merge-delta follows "
+        "the stored stage_score schema",
     )
     ap.add_argument("--make-zip", default=None, metavar="PATH")
     args = ap.parse_args()

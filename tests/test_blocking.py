@@ -78,7 +78,7 @@ def test_similar_surfaces_share_a_band(spark):
 
 
 def test_block_audit_sees_dropped_keys(spark):
-    """block_keys drops keys above cap_factor*max_block; block_audit must
+    """block_keys drops keys above CAP_FACTOR*max_block; block_audit must
     report those very keys with dropped=true (the cap is an audited
     trade, not a silent one)."""
     m, cand, _ = _keys(spark, max_block=4)

@@ -6,6 +6,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from entity_knowledge_in_bert_spark.operators import cluster as cluster_mod
 from entity_knowledge_in_bert_spark.operators.cluster import (
     assign_clusters,
     connected_components,
@@ -357,19 +358,20 @@ def test_cc_local_solve_equality(spark):
 
 def test_cc_local_solve_respects_threshold(spark, monkeypatch):
     """Above the threshold the loop path must run (the local path would
-    be a single-task scale hazard): force the threshold to 0 and assert
-    the result still matches — i.e. n_edges > threshold falls through
-    to LS/SS."""
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_CC_EDGES", "0")
+    be a single-task scale hazard): with the threshold forced to 0, an
+    edge count at the threshold plans the single-task MapInPandas solve
+    and one above it plans none (the LS/SS loop); both match the
+    oracle."""
+    monkeypatch.setattr(cluster_mod, "LOCAL_CC_MAX_EDGES", 0)
     edges = [(i, i + 1) for i in range(30)]
     df = spark.createDataFrame(
         [(int(u), int(v), 1.0) for u, v in edges],
         "src long, dst long, score double",
     )
-    got = {
-        r["mention_id"]: r["cluster_id"]
-        for r in connected_components(df, n_edges=len(edges)).collect()
-    }
     oracle = _union_find(31, edges)
-    for node in range(31):
-        assert got[node] == oracle[node]
+    for n_edges, local in ((0, True), (len(edges), False)):
+        cc = connected_components(df, n_edges=n_edges)
+        plan = cc._jdf.queryExecution().executedPlan().toString()
+        assert ("MapInPandas" in plan) == local, plan
+        got = {r["mention_id"]: r["cluster_id"] for r in cc.collect()}
+        assert got == {node: oracle[node] for node in range(31)}

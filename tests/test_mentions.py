@@ -110,6 +110,34 @@ def test_latest_snapshot_matches_window_formulation(spark):
     assert pages.count() > len(sn)  # the dedup actually dropped stales
 
 
+def test_latest_snapshot_null_and_tie_policy(spark):
+    """A NULL warc_ts loses to any real one, a url whose warc_ts is
+    always NULL keeps its real row (not an all-NULL one), and an
+    exact-timestamp tie picks the same row under either input order."""
+    import datetime
+
+    t1, t2 = datetime.datetime(2020, 1, 1), datetime.datetime(2021, 1, 1)
+    rows = [
+        ("a", t1, "old"), ("a", t2, "new"),
+        ("b", None, "undated"), ("b", t1, "dated"),
+        ("c", None, "only"),
+        ("d", t1, "m"), ("d", t1, "n"), ("d", None, "z"),
+    ]
+    picks = []
+    for order in (rows, rows[::-1]):
+        pages = spark.createDataFrame(
+            order, "url string, warc_ts timestamp, text string"
+        ).coalesce(1)
+        got = {r["url"]: (r["warc_ts"], r["text"])
+               for r in mentions.latest_snapshot(pages).collect()}
+        assert got["a"] == (t2, "new")
+        assert got["b"] == (t1, "dated")
+        assert got["c"] == (None, "only")
+        assert got["d"][0] == t1 and got["d"][1] in ("m", "n")
+        picks.append(got["d"])
+    assert picks[0] == picks[1]
+
+
 def test_detect_mentions_plan_has_no_exchange(spark):
     """The r7 win being guarded: detection itself plans ZERO shuffles —
     only the alias BroadcastExchange (guide §2.4)."""

@@ -124,20 +124,6 @@ def test_determinism_two_runs(spark, tmp_path_factory):
     assert hashes[0] == hashes[1]
 
 
-def test_bucketed_mentions_pipeline_identical(spark, pipeline_run, tmp_path_factory):
-    """bucket_mentions changes the stage_mention LAYOUT only: the full
-    pipeline output is row-identical to the unbucketed run."""
-    io, clusters = pipeline_run
-    wh = str(tmp_path_factory.mktemp("wh_bucketed"))
-    io2 = TableIO(spark, wh)
-    pipe = ERPipeline(spark, io2, bucket_mentions=8)
-    pages = datagen.gen_pages_df(spark, N_PAGES)
-    clusters2 = pipe.run(pages)
-    a = {(r["mention_id"], r["cluster_id"]) for r in clusters.collect()}
-    b = {(r["mention_id"], r["cluster_id"]) for r in clusters2.collect()}
-    assert a == b
-
-
 @pytest.fixture(scope="module")
 def contract_off_run(spark, tmp_path_factory):
     """A base build with block_contract pinned OFF: (io, cluster rows)."""

@@ -1,5 +1,8 @@
 """TableIO — snapshot semantics, time travel, lineage (north_rule X4)."""
 
+import os
+import types
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -61,10 +64,19 @@ def test_append_chain(spark, io):
     assert io.read("t6").count() == 18
 
 
+class _PathsSpark:
+    """spark stub: ``read.parquet`` returns the snapshot dirs it was given."""
+
+    read = types.SimpleNamespace(
+        parquet=lambda *paths: sorted(os.path.basename(p) for p in paths)
+    )
+
+
 def test_chain_rows_counts_each_snapshot_once(tmp_path):
     """Manifest-only, no Spark job: a diamond-shaped include graph counts
-    its shared ancestor once, and a cyclic one terminates."""
-    io = TableIO(None, str(tmp_path / "wh"))
+    its shared ancestor once, and a cyclic one terminates — in
+    chain_rows and in the directory list `read` hands to Spark."""
+    io = TableIO(_PathsSpark(), str(tmp_path / "wh"))
 
     def snap(sid, rows, *includes):
         return {"snapshot_id": sid, "rows": rows, "complete": True,
@@ -79,36 +91,41 @@ def test_chain_rows_counts_each_snapshot_once(tmp_path):
         snap("x", 1, "y"), snap("y", 10, "x"),
     ]})
     assert io.chain_rows("cycle") == 11
+    assert io.read("diamond") == ["a", "b", "c", "d"]
+    assert io.read("cycle") == ["x", "y"]
+    assert io.read("cycle", "x", chain=False) == ["x"]
 
 
-def test_bucketed_join_has_no_exchange(spark, io):
-    """bucket_by snapshots: an equi-join on the bucket column planned as
-    a sort-merge join needs NO exchange and NO sort on either side —
-    the co-located-join layout that deletes a full-corpus shuffle per
-    consumer at 100 TB."""
-    left = spark.range(1000).withColumn("v", F.col("id") * 2)
-    right = spark.range(1000).withColumn("w", F.col("id") + 1)
-    io.write(left, "bl", bucket_by=(["id"], 4))
-    io.write(right, "br", bucket_by=(["id"], 4))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = io.read("bl").join(io.read("br"), "id")
-        assert j.count() == 1000
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+def _relink(io, table, includes):
+    """Manifest surgery: set each named entry's ``includes`` (entries are
+    named by write order) and return the snapshot ids in write order."""
+    manifest = io._load_manifest(table)
+    ids = [s["snapshot_id"] for s in manifest["snapshots"]]
+    for i, inc in includes.items():
+        manifest["snapshots"][i]["includes"] = [ids[j] for j in inc]
+    io._save_manifest(table, manifest)
+    return ids
 
 
-def test_bucketed_snapshot_readable_without_catalog(spark, io, tmp_path):
-    """The parquet files behind a bucketed snapshot stay readable when
-    the writing session's in-memory catalog is gone."""
-    io.write(spark.range(50).withColumn("v", F.lit(1)), "bc", bucket_by=(["id"], 2))
-    man = io._load_manifest("bc")
-    bt = man["snapshots"][-1]["bucket_table"]
-    spark.sql(f"DROP TABLE {bt}")
-    assert io.read("bc").count() == 50
+def test_read_and_compact_walk_diamond_and_cycle_once(spark, io):
+    """Real writes relinked into a diamond (d -> b, c; b, c -> a) and a
+    two-snapshot cycle: `read` returns each snapshot's rows once, so its
+    count equals `chain_rows` (which drives the broadcast and local-CC
+    decisions), and `compact` terminates and folds exactly those rows."""
+    io.write(spark.range(5), "dm", stage="s1")
+    for lo, hi in ((5, 8), (8, 10), (10, 11)):
+        io.write(spark.range(lo, hi), "dm", stage="s1", append=True)
+    _relink(io, "dm", {2: [0], 3: [1, 2]})
+    assert io.chain_rows("dm") == 11
+    assert sorted(r["id"] for r in io.read("dm").collect()) == list(range(11))
+    assert io.compact("dm").rows == 11
+
+    io.write(spark.range(3), "cy", stage="s1")
+    io.write(spark.range(3, 5), "cy", stage="s1", append=True)
+    _relink(io, "cy", {0: [1]})
+    assert io.read("cy").count() == io.chain_rows("cy") == 5
+    assert io.compact("cy").rows == 5
+    assert sorted(r["id"] for r in io.read("cy").collect()) == list(range(5))
 
 
 def test_tag_rollback_restores_prior_state(spark, io):
@@ -143,10 +160,6 @@ class _IcebergWriter:
 
     def using(self, fmt):
         self.log.append(("using", fmt))
-        return self
-
-    def partitionedBy(self, *cols):
-        self.log.append(("partitionedBy", len(cols)))
         return self
 
     def append(self):
@@ -217,19 +230,6 @@ def test_iceberg_write_branch(tmp_path):
     assert ("append",) in log2 and ("createOrReplace",) not in log2
     assert info2.snapshot_id == "102"
     assert io2.latest_snapshot("pages") == "102"
-
-
-def test_iceberg_multi_column_bucket_raises(tmp_path):
-    """Iceberg's bucket transform hashes ONE column; a multi-column spec
-    must be rejected rather than silently changing the layout (ADVICE
-    r2)."""
-    from entity_knowledge_in_bert_spark.sources.tableio import TableIO
-
-    io2 = TableIO(_IcebergSpark(), str(tmp_path / "iwh2"), catalog="ice")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="multi-column bucket_by"):
-        io2.write(_IcebergDF([]), "t", bucket_by=(["a", "b"], 4))
 
 
 def test_iceberg_rollback_not_implemented(tmp_path):
@@ -521,3 +521,19 @@ def test_compact_prune_keeps_outside_chain_reference(spark, io):
     assert base in ids and "snap-branch-ref" in ids
     assert os.path.exists(os.path.join(io.warehouse, "tc7", base))
     assert io.read("tc7", snapshot_id=base).count() == 5
+
+    # a branch that includes the MIDDLE chain entry pins that entry's
+    # whole ancestry: prune keeps mid and, transitively, its base
+    io.write(spark.range(5), "tc8", stage="s1")
+    io.write(spark.range(5, 8), "tc8", stage="s1", append=True)
+    io.write(spark.range(8, 9), "tc8", stage="s1", append=True)
+    io.write(spark.range(100, 102), "tc8", stage="s1", append=True)
+    ids = _relink(io, "tc8", {3: [1]})
+    manifest = io._load_manifest("tc8")
+    # the branch is not the head: move it before the chain's head
+    manifest["snapshots"].insert(2, manifest["snapshots"].pop(3))
+    io._save_manifest("tc8", manifest)
+    io.compact("tc8", prune=True)
+    assert sorted(r["id"] for r in io.read("tc8", snapshot_id=ids[3]).collect()) == (
+        list(range(8)) + [100, 101]
+    )
