@@ -15,6 +15,10 @@ is ``localCheckpoint``-ed to truncate lineage (X9) — on the production
 path the pipeline additionally persists the frontier to the checkpoint
 table per iteration (plans/pipeline.py), so a killed run resumes from the
 last completed iteration.
+
+An edge set whose size the caller knows to be at most LOCAL_CC_MAX_EDGES
+skips the loop: one task solves it exactly with ``_local_cc``, the numpy
+kernel that also runs the optional block-grouped contraction pre-pass.
 """
 
 from __future__ import annotations
@@ -24,23 +28,14 @@ from pyspark.sql import functions as F
 
 MAX_ITERS = 50
 
-# Frontier partition sizing (VERDICT r4 #1): ~2M canonical edges per
-# partition keeps each LS/SS task's shuffle block in the tens of MB —
-# small enough to sort in memory, large enough that a sandbox frontier
-# schedules a handful of tasks instead of a full shuffle width. The old
-# `min(64, input splits)` clamp right-sized tiny frontiers but became a
-# hard ceiling at scale: a 100 TB edge table arrives with thousands of
-# splits and a frontier that 64 partitions cannot hold without spill.
+# Frontier partition sizing: ~2M canonical edges per partition keeps
+# each LS/SS task's shuffle block in the tens of MB — small enough to
+# sort in memory — with no fixed partition ceiling below the sanity cap.
 EDGES_PER_PARTITION = 2_000_000
 MAX_FRONTIER_PARTITIONS = 65_536
-# Balance floor: the density rule alone can leave a mid-sized frontier
-# narrower than the cluster (13.8M edges -> 7 partitions on 8+ cores at
-# the 1.6M-page probe), so the first iteration's map side under-fills
-# the executors and one stolen core stalls 1/7 of the stage. Pad up to
-# 4 tasks/core — but only while each padded partition still carries
-# >= MIN_EDGES_PER_PARTITION edges, so a genuinely tiny frontier never
-# schedules hundreds of near-empty tasks. At 10^11 edges the density
-# term (~50k partitions) dwarfs the floor, which then costs nothing.
+# Balance floor: pad a frontier up to 4 tasks/core, but only while each
+# padded partition still carries >= MIN_EDGES_PER_PARTITION edges, so a
+# tiny frontier never schedules hundreds of near-empty tasks.
 FRONTIER_WIDTH_FACTOR = 4
 MIN_EDGES_PER_PARTITION = 50_000
 
@@ -60,19 +55,11 @@ def _plan_frontier_partitions(
         pad_limit = max(1, int(n_edges) // MIN_EDGES_PER_PARTITION)
         est = max(est, min(floor, pad_limit))
     else:
-        # No edge count: the input's split count is the only signal, but
-        # a WIDE input (corpus-partitioned edges) with a tiny frontier
-        # would schedule thousands of near-empty tasks per LS/SS
-        # iteration on exactly the callers that don't pass counts
-        # (assign_clusters, dedup CC, query oracles — ADVICE r5). Clamp
-        # to the width every OTHER shuffle of unknown size gets — the
-        # larger of 4 tasks/core and the session's
-        # spark.sql.shuffle.partitions — so a tuned production cluster
-        # (shuffle width in the thousands) never squeezes a genuinely
-        # large unknown frontier onto 4xcores tasks, while a tiny
-        # frontier schedules no more tasks than any ordinary groupBy.
-        # Callers that know their edge count should still thread n_edges
-        # (the pipeline does, from the stage_score manifest — free).
+        # No edge count: the input's split count, clamped to the width
+        # every other shuffle of unknown size gets — the larger of 4
+        # tasks/core and spark.sql.shuffle.partitions — so a wide input
+        # with a tiny frontier schedules no more tasks than an ordinary
+        # groupBy, and a tuned cluster's shuffle width still applies.
         width = FRONTIER_WIDTH_FACTOR * max(1, default_parallelism)
         if shuffle_partitions:
             width = max(width, int(shuffle_partitions))
@@ -110,23 +97,17 @@ def _persistent_ids(sc) -> set | None:
 
 def _release_stale_checkpoints(sc, tracked_ids: set) -> None:
     """Unpersist every locally-checkpointed frontier RDD this CC run
-    created EXCEPT the newest one (the live frontier). Without this, a
-    long CC run accumulates one MEMORY_AND_DISK-cached RDD per iteration
-    until the context cleaner happens to run — at the 1.6M-page probe
-    that pressure is the super-linear cluster-stage growth BASELINE.md
-    flagged (r5 watch item).
+    created EXCEPT the newest one (the live frontier), so CC memory stays
+    O(frontier), not one cached RDD per iteration.
 
     ``tracked_ids`` holds only ids that appeared in bracketed
-    getPersistentRDDs() diffs around THIS loop's localCheckpoint calls
-    (ADVICE r5: a cache persisted concurrently elsewhere in the context
-    must never be unpersisted here — unpersisting someone else's
-    localCheckpoint truncates their lineage unrecoverably). RDD ids are
-    monotonic, so the newest tracked id is the live frontier. Residual
-    window: an RDD another driver THREAD persists during the
-    microseconds of one of our bracketed calls is treated as ours; the
-    staged pipeline's single-driver contract makes that acceptable, and
-    the failure mode is bounded to that window rather than "anything
-    persisted since CC start"."""
+    getPersistentRDDs() diffs around THIS loop's localCheckpoint calls:
+    a cache persisted elsewhere in the context is never unpersisted here
+    (unpersisting someone else's localCheckpoint truncates their lineage
+    unrecoverably). RDD ids are monotonic, so the newest tracked id is
+    the live frontier. Residual window: an RDD another driver THREAD
+    persists during one of our bracketed calls is treated as ours; the
+    staged pipeline's single-driver contract makes that acceptable."""
     if not tracked_ids:
         return
     try:
@@ -174,97 +155,64 @@ def _hash_to_min(u, v):
     return ids, ids[label]
 
 
+def _local_cc(batches):
+    """The one local-CC ``mapInPandas`` kernel: gathers the task's (u, v)
+    edge batches, drops self-loops, and emits (u=node, v=root) for every
+    endpoint of the remaining edges, root being the min node id of its
+    component within THIS task's edge set (``_hash_to_min``)."""
+    import numpy as np
+    import pandas as pd
+
+    frames = list(batches)
+    if not frames:
+        return
+    edges = pd.concat(frames)
+    u = edges["u"].to_numpy(dtype=np.int64)
+    v = edges["v"].to_numpy(dtype=np.int64)
+    keep = u != v
+    ids, roots = _hash_to_min(u[keep], v[keep])
+    yield pd.DataFrame({"u": ids, "v": roots})
+
+
 def _contract_partitions(canon: DataFrame) -> DataFrame:
     """Partition-local contraction (the classic CC pre-pass, cf. GraphX's
-    local aggregation): within each partition, solve the LOCAL connected
-    components exactly (``_hash_to_min``) and emit one canonical
-    (member, local_root) star edge per non-root member — a single narrow
-    ``mapInPandas`` pass, NO shuffle.
+    local aggregation): ``_local_cc`` on each partition, keeping one
+    canonical (member, local_root) star edge per non-root member — a
+    single narrow pass, NO shuffle.
 
     CC-preserving: a local component's members stay connected through
     their shared root, and stars never connect nodes that were not
     already connected, so the global components and their min ids are
-    unchanged (equality-tested vs the uncontracted loop). Output is
-    canonical (u > v) because the root is the local min.
-
-    When it pays (measured, BASELINE.md r6): a partition must hold a
-    whole connected piece. On the ER pipeline's block-clique topology an
-    edge-hashed layout scatters each node's edges across ~min(degree,
-    parts) partitions and the pass re-emits ~1 row per (node, partition)
-    incidence, so ``connected_components`` runs it only after
-    repartitioning by ``contract_by`` (the block key), which co-locates
-    each block's matched subgraph. At 10^11 edges the pass
-    runs on ~2M-edge partitions (32 MB arrays, bounded by
-    ``_plan_frontier_partitions``), one narrow pass, no shuffle."""
-
-    def contract(batches):
-        import numpy as np
-        import pandas as pd
-
-        us, vs = [], []
-        for pdf in batches:
-            us.append(pdf["u"].to_numpy(dtype=np.int64))
-            vs.append(pdf["v"].to_numpy(dtype=np.int64))
-        if not us:
-            return
-        u = np.concatenate(us)
-        v = np.concatenate(vs)
-        ids, roots = _hash_to_min(u, v)
-        mask = ids != roots
-        yield pd.DataFrame({"u": ids[mask], "v": roots[mask]})
-
-    return canon.mapInPandas(contract, schema="u long, v long")
+    unchanged under ANY partitioning. Output is canonical (u > v) because
+    the root is the local min. It only compresses when a partition holds
+    whole connected pieces, hence ``connected_components(contract_by=)``
+    (BASELINE.md, block-grouped CC contraction)."""
+    return canon.mapInPandas(_local_cc, schema="u long, v long").filter(
+        F.col("u") != F.col("v")
+    )
 
 
-# Scale-adaptive CC cutover (r7, guide §1.2/§2): an edge set the caller
-# KNOWS (from the snapshot manifest — no count job) to be small enough
-# for one task's memory is solved exactly in ONE narrow pass with the
-# vectorized `_hash_to_min` kernel — no LS/SS loop, no per-iteration
-# shuffles/checkpoints/signature actions. 4M canonical edges is ~64 MB
-# of id arrays plus the kernel's uniques/inverse bookkeeping (~3x) —
-# comfortably inside a single task at any sane executor sizing. Above
-# the threshold (every realistic production frontier) the distributed
-# LS/SS loop runs unchanged; equality of the two paths is test-gated
+# An edge set the caller KNOWS (from the snapshot manifest — no count
+# job) to hold at most this many edges is solved exactly in ONE task by
+# `_local_cc` — no LS/SS loop, no per-iteration shuffles, checkpoints or
+# signature actions. 4M canonical edges is ~64 MB of id arrays plus the
+# kernel's uniques/inverse bookkeeping (~3x): inside a single task at
+# any sane executor sizing. Equality with the LS/SS loop is test-gated
 # (test_cc_local_solve_equality).
 LOCAL_CC_MAX_EDGES = 4_000_000
 
 
 def _solve_local(edges: DataFrame) -> DataFrame:
-    """Exact single-task CC: coalesce(1) (narrow — no exchange) feeds
-    every canonical edge to one `_hash_to_min` call; emits the same
-    (mention_id, cluster_id) table the LS/SS fixpoint produces (min id
-    per component, every edge-incident node present, self-loops
-    dropped)."""
-
-    def solve(batches):
-        import numpy as np
-        import pandas as pd
-
-        us, vs = [], []
-        for pdf in batches:
-            us.append(pdf["src"].to_numpy(dtype=np.int64))
-            vs.append(pdf["dst"].to_numpy(dtype=np.int64))
-        if not us:
-            return
-        u = np.concatenate(us)
-        v = np.concatenate(vs)
-        keep = u != v
-        u, v = u[keep], v[keep]
-        if not len(u):
-            return
-        ids, roots = _hash_to_min(u, v)
-        yield pd.DataFrame({"mention_id": ids, "cluster_id": roots})
-
+    """Exact single-task CC: ``_local_cc`` over coalesce(1) (narrow — no
+    exchange); the same (mention_id, cluster_id) table the LS/SS fixpoint
+    produces (min id per component, every edge-incident node present,
+    self-loops dropped)."""
     return (
-        edges.select("src", "dst")
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .coalesce(1)
-        .mapInPandas(solve, schema="mention_id long, cluster_id long")
+        .mapInPandas(_local_cc, schema="u long, v long")
+        .select(F.col("u").alias("mention_id"), F.col("v").alias("cluster_id"))
     )
-
-
-def _symmetric(edges: DataFrame) -> DataFrame:
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    return e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -324,14 +272,11 @@ def connected_components(
     (equality-tested in test_cc_durable_iterations).
 
     ``contract_by``: name of an edge column (e.g. the blocking key) to
-    GROUP a partition-local contraction pre-pass by. An ungrouped
-    pre-pass cannot compress the pipeline's block-clique match graph —
-    each node's edges scatter across ~min(degree, parts) partitions
-    (BASELINE.md r6). Repartitioning by the block key co-locates each
-    block's ENTIRE matched subgraph in one partition, so
-    ``_contract_partitions`` collapses it to one star edge per non-root
-    member: the LS/SS loop's input shrinks from ~degree edges/node
-    (measured ~24 at the 400k probe) to ~#(node, block) memberships. Costs the same single
+    GROUP a partition-local contraction pre-pass by. Repartitioning by
+    the block key co-locates each block's ENTIRE matched subgraph in one
+    partition, so ``_contract_partitions`` collapses it to one star edge
+    per non-root member: the LS/SS loop's input shrinks from ~degree
+    edges/node to ~#(node, block) memberships. Costs the same single
     exchange as the default init (keyed by block instead of by edge) on
     the full edge set; every subsequent iteration shuffles the
     contracted set. Same fixpoint (star contraction is CC-preserving
@@ -360,20 +305,16 @@ def connected_components(
         return _solve_local(edges)
 
     # the edge frontier is orders of magnitude smaller than the corpus:
-    # right-size its partitioning so each LS/SS iteration schedules a
-    # handful of tasks instead of a full shuffle width — but scale with
-    # the edge count (``n_edges``, free from the stage_score manifest),
-    # not a constant: the old min(..., 64) clamp right-sized sandbox
-    # frontiers but became the ceiling on every LS/SS iteration at 100x
-    # (VERDICT r4 #1). Falls back to the input's split count (free — no
-    # job) when the caller doesn't know the count.
+    # size its partitioning from the edge count (``n_edges``, free from
+    # the stage_score manifest), else from the input's split count (free
+    # — no job) when the caller doesn't know the count.
     src = edges if start_frontier is None else start_frontier
     parts = _frontier_partitions(src, n_edges)
     sc = src.sparkSession.sparkContext
     # ids OUR checkpoints persisted: every localCheckpoint call below is
     # bracketed by getPersistentRDDs() diffs (persist registration is
     # synchronous at the call, even for eager=False) so release never
-    # touches an RDD some other code persisted (ADVICE r5)
+    # touches an RDD some other code persisted
     tracked: set = set()
 
     def _bracket(before: set | None) -> None:

@@ -6,18 +6,18 @@ alias matching in ``create_wiki_training_data.py`` [R]. The reference runs
 a per-document Python automaton; at 10^12 documents that is a per-row
 Python hot path, so this engine re-expresses dictionary matching as:
 
-    tokens (posexplode + offsets via window sum)
-      -> token n-grams (lead() windows, n = alias token lengths)
+    tokens (split + space-position offsets)
+      -> token n-grams (element_at, n = alias token lengths)
       -> broadcast equi-join against the alias dictionary
 
 which Catalyst turns into scan -> codegen ngram expansion -> broadcast
-hash join: no shuffles on the big side beyond the token window, and the
-alias table (<= a few 100 MB) broadcasts (SURVEY.md §4 X3).
+hash join: no shuffle on the big side, and the alias table (<= a few
+100 MB) broadcasts (SURVEY.md §4 X3).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 CTX_CHARS = 80  # context window (chars) each side, surface masked out
@@ -52,22 +52,6 @@ def english_pages(pages: DataFrame) -> DataFrame:
     """P1 article filter — applied BEFORE any UDF so the predicate reaches
     the parquet scan (pushdown is blocked through pandas UDFs)."""
     return pages.filter((F.col("lang") == "en") & (F.length("text") > 0))
-
-
-def tokens_with_offsets(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """(url, pos, tok, offset): char offset of each whitespace token."""
-    toks = pages.select(
-        "url", F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok")
-    )
-    w = (
-        Window.partitionBy("url")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return toks.withColumn(
-        "offset",
-        F.coalesce(F.sum(F.length("tok") + 1).over(w), F.lit(0)).cast("int"),
-    )
 
 
 def detect_mentions(

@@ -2,12 +2,11 @@
 ``binary`` payloads + typed metadata; decode / feature-extract /
 frame-sample as Arrow-batched kernels over ``mapInPandas``.
 
-The image/audio codecs are NOT in this container, so the decode step is
-STUBBED (clearly marked): ``decode_asset`` raises NotImplementedError for
-real codecs and provides a deterministic fake decoder used by tests. The
-Spark-side plumbing — schema, partitioning, UDF signature, Arrow batch
-shape — is real and tested; swapping the stub for PIL/ffmpeg changes one
-function body.
+No image/audio codec is a dependency, so the decode step is a STUB
+(clearly marked): ``decode_asset`` is a deterministic fake decoder, used
+by the tests and the ``mm_*`` oracles. The Spark-side plumbing — schema,
+partitioning, UDF signature, Arrow batch shape — is real and tested;
+swapping the stub for PIL/ffmpeg changes one function body.
 """
 
 from __future__ import annotations
@@ -19,9 +18,6 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: Real decoders would be registered here (PIL, soundfile, pyav, ...).
-_REAL_CODECS_AVAILABLE = False
 
 FEATURES_SCHEMA = (
     "asset_id long, kind string, n_bytes int, payload_sha string, "
@@ -48,7 +44,7 @@ def synth_assets(docs: DataFrame) -> DataFrame:
     )
 
 
-def _fake_decode(payload: bytes, kind: str, width: int, height: int):
+def decode_asset(payload: bytes, kind: str, width: int, height: int):
     """STUB decoder: deterministic pseudo-pixels from payload bytes.
 
     A real implementation would be: PIL.Image.open(BytesIO(payload)) /
@@ -67,26 +63,6 @@ def _fake_decode(payload: bytes, kind: str, width: int, height: int):
     # form is reproducible verbatim in the DuckDB oracle
     rnd = lambda x: math.floor(x * 1000000.0 + 0.5) / 1000000.0  # noqa: E731
     return n_frames, rnd(mean), rnd(var**0.5)
-
-
-def _real_decode(payload: bytes, kind: str, width: int, height: int):
-    """The real-codec branch (PIL.Image.open / soundfile.read / pyav
-    frame iteration). Codecs are absent from this container, so the body
-    is an explicit stub — wiring a codec means implementing THIS function
-    and flipping ``_REAL_CODECS_AVAILABLE``; the dispatch below is
-    already correct for both flag values (VERDICT r2 wrong #3: the old
-    single-branch guard raised when the flag was set to its documented
-    "codecs present" meaning)."""
-    raise NotImplementedError("real codec path not wired in this container")
-
-
-def decode_asset(payload: bytes, kind: str, width: int, height: int):
-    """Decode an asset payload: real codecs when available, else the
-    deterministic fake (same output contract; tests + the driver oracle
-    use the fake)."""
-    if _REAL_CODECS_AVAILABLE:  # pragma: no cover - not in sandbox
-        return _real_decode(payload, kind, width, height)
-    return _fake_decode(payload, kind, width, height)
 
 
 def extract_features(assets: DataFrame, batch_hint: int = 1024) -> DataFrame:

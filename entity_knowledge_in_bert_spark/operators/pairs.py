@@ -2,10 +2,10 @@
 
 The reference never materializes mention-mention pairs (it scores mention
 vs entity pointwise); the north_rule's pairwise re-expression needs
-all-pairs *within a block*: a self-equi-join on block_key with the
-canonical ``a.id < b.id`` dedup. Block sizes are capped upstream
-(blocking.py), so the quadratic term is bounded by max_block² per block —
-the partitioned nested-loop stays inside one shuffle partition per key.
+candidate pairs *within a block*, canonical ``mention_a < mention_b``.
+Block sizes are capped upstream (blocking.py), and each mention pairs
+with a bounded hub + window neighborhood of its block, so the expansion
+stays inside one shuffle partition per key.
 """
 
 from __future__ import annotations
@@ -14,71 +14,50 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def within_block_pairs(keys: DataFrame, window: int | None = 12) -> DataFrame:
+# sorted-neighborhood cap: within a block, each mention pairs with its
+# WINDOW successors in mention_id order (and with the block's first
+# N_HUB mentions), turning the per-block quadratic B²/2 into ~B·W
+WINDOW = 12
+N_HUB = 3
+
+
+def within_block_pairs(keys: DataFrame) -> DataFrame:
     """(mention_id, block_key) -> distinct (mention_a, mention_b) pairs.
 
-    ``window``: sorted-neighborhood cap — within a block, each mention
-    pairs only with its ``window`` successors in mention_id order, turning
-    the per-block quadratic B²/2 into B·W. For a block whose members all
-    co-refer (the common case after candidate-entity blocking), the
-    windowed chain keeps the block connected, and transitive clustering
-    recovers the full clique — so pairwise F1 is preserved while pair
-    volume (the dominant cost at scale) drops ~B/2W ×. ``window=None``
-    restores exhaustive all-pairs.
+    Hub + window topology: every mention pairs with its ``WINDOW``
+    successors AND with the block's first ``N_HUB`` mentions. For a block
+    whose members all co-refer (the common case after candidate-entity
+    blocking), the windowed chain keeps the block connected and
+    transitive clustering recovers the full clique — so pairwise F1 is
+    preserved while pair volume (the dominant cost at scale) drops
+    ~B/2W ×. The hub anchors keep the matched subgraph at diameter ~2,
+    so connected components converges in O(1) iterations instead of
+    O(log B) for a pure chain.
 
     A pair generated by several keys (entity key + LSH band) is emitted
     once; the shuffle is on block_key, then a groupBy on the pair ids
     dedups across keys.
     """
-    if window is None:
-        left = keys.select(F.col("block_key"), F.col("mention_id").alias("mention_a"))
-        right = keys.select(F.col("block_key"), F.col("mention_id").alias("mention_b"))
-        pairs = left.join(right, "block_key").filter(
-            F.col("mention_a") < F.col("mention_b")
-        )
-    else:
-        # hub + window topology: every mention pairs with its `window`
-        # successors AND with the block's first `N_HUB` mentions. The hub
-        # anchors keep the matched subgraph at diameter ~2, so connected
-        # components converges in O(1) iterations instead of O(log B)
-        # for a pure chain.
-        #
-        # Formulated as ONE aggregation + codegen array expansion (r7,
-        # guide §2.4/§3.3): collect each block's sorted member list
-        # (bounded by cap_factor*max_block — the upstream cap), then
-        # posexplode members and explode each member's hub+window
-        # successor slice. The previous row_number window + self-join on
-        # block_key planned an extra Sort + SortMergeJoin over the full
-        # key set; this shape needs only the exchange the groupBy pays
-        # (A/B-measured: ~10% faster at the 20k-page bench, and the
-        # struct-building flatten/transform variant measured SLOWER than
-        # the join — generate-of-longs is the fast expansion). Pair set
-        # is identical: sort_array == the window's mention_id ordering
-        # (ids are distinct within a block), 0-based element i maps to
-        # _rn = i+1, and slice(_ms, i+2, ...) enumerates exactly the old
-        # (_rb > _ra) & (_rb <= _ra+window | _ra <= n_hub) successors —
-        # equality-tested against the legacy formulation
-        # (tests/test_pairs.py).
-        n_hub = 3
-        grouped = keys.groupBy("block_key").agg(
-            F.sort_array(F.collect_list("mention_id")).alias("_ms")
-        )
-        pairs = (
-            grouped.select(
-                "block_key", "_ms",
-                F.posexplode("_ms").alias("_i", "mention_a"),
-            )
-            .select(
-                "block_key",
-                "mention_a",
-                F.explode(
-                    F.expr(
-                        f"slice(_ms, _i + 2, IF(_i < {n_hub}, "
-                        f"size(_ms), {int(window)}))"
-                    )
-                ).alias("mention_b"),
-            )
-        )
+    # ONE aggregation + codegen array expansion (guide §2.4/§3.3):
+    # collect each block's sorted member list (bounded by the upstream
+    # block-size cap), then posexplode members and explode each member's
+    # hub+window successor slice — no Sort + SortMergeJoin over the key
+    # set (measurements in BASELINE.md). sort_array == mention_id
+    # order (ids are distinct within a block), and slice(_ms, i+2, ...)
+    # enumerates exactly the successors of the legacy row_number window
+    # + self-join formulation (equality-tested in tests/test_pairs.py).
+    grouped = keys.groupBy("block_key").agg(
+        F.sort_array(F.collect_list("mention_id")).alias("_ms")
+    )
+    pairs = grouped.select(
+        "block_key", "_ms", F.posexplode("_ms").alias("_i", "mention_a")
+    ).select(
+        "block_key",
+        "mention_a",
+        F.explode(
+            F.expr(f"slice(_ms, _i + 2, IF(_i < {N_HUB}, size(_ms), {WINDOW}))")
+        ).alias("mention_b"),
+    )
     return pairs.groupBy("mention_a", "mention_b").agg(
         F.min("block_key").alias("block_key")
     )

@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import blocking, mentions, pairs
-from ..operators.cluster import LOCAL_CC_MAX_EDGES, assign_clusters
+from ..operators.cluster import LOCAL_CC_MAX_EDGES
 from ..operators.incremental import merge_components
 from ..sources.tableio import TableIO
 from .pipeline import ERPipeline, extract_plan
@@ -250,54 +250,48 @@ class IncrementalER:
             edges = self.io.read("stage_score", score_snap.snapshot_id, chain=False)
 
         with pipe.timed("cluster"):
-            # merge only touched components. Manifest-derived upper bounds
-            # for the touched subgraphs (guide §1.2 — free, no count
-            # jobs): the merge's star∪delta edge set is bounded by |old
-            # assignment| + |delta edges|; the retract re-solve's
-            # surviving subgraph by the full stage_score chain. Passed
-            # ONLY when the bound is small enough to take
-            # cluster._solve_local's exact single-task path; a bound above
-            # the cutover keeps the shuffle-width fallback — a
-            # corpus-loose bound must not widen the init exchange.
-            def _local_bound(n: int) -> int | None:
-                return n if 0 <= n <= LOCAL_CC_MAX_EDGES else None
-
-            merge_bound = _local_bound(
-                self.io.snapshot_entry("stage_cluster")["rows"] + score_snap.rows
-            )
+            # ONE solve re-clusters only the touched components. A
+            # retraction can SPLIT a component (removing a node is not a
+            # min-merge), so the clusters that held a retracted mention
+            # leave the old assignment and their live members re-enter
+            # as new nodes, with their surviving stored edges added to
+            # the delta edges: merge_components' identity then holds
+            # unchanged (O(touched), never the corpus).
             old = self.io.read("stage_cluster").select("mention_id", "cluster_id")
+            edges = edges.select("src", "dst")
+            cand = delta_ids
+            bound = self.io.snapshot_entry("stage_cluster")["rows"] + score_snap.rows
             if retracts is not None:
-                # removing a node can SPLIT a component: re-solve exactly
-                # the clusters that contained a retracted mention from
-                # their surviving edge subgraph (O(touched), never the
-                # corpus).
-                affected = (
+                hit = (
                     old.join(retracts, "mention_id", "semi")
                     .select("cluster_id")
                     .distinct()
                 )
-                kept = old.join(affected, "cluster_id", "left_anti")
-                sub = (
-                    old.join(affected, "cluster_id", "semi")
+                live = (
+                    old.join(hit, "cluster_id", "semi")
                     .join(retracts, "mention_id", "left_anti")
                     .select("mention_id")
                 )
-                sub_edges = (
+                old = old.join(hit, "cluster_id", "left_anti")
+                edges = edges.unionByName(
                     self.io.read("stage_score")
-                    .join(sub.withColumnRenamed("mention_id", "src"), "src", "semi")
-                    .join(sub.withColumnRenamed("mention_id", "dst"), "dst", "semi")
+                    .join(live.withColumnRenamed("mention_id", "src"), "src", "semi")
+                    .join(live.withColumnRenamed("mention_id", "dst"), "dst", "semi")
+                    .select("src", "dst")
                 )
-                resolved = assign_clusters(
-                    sub, sub_edges,
-                    n_edges=_local_bound(self.io.chain_rows("stage_score")),
-                ).select("mention_id", "cluster_id")
-                old = kept.unionByName(resolved)
-            merged = merge_components(old, edges, n_edges=merge_bound)
-            # isolated delta mentions -> singleton clusters (same
+                cand = cand.unionByName(live)
+                bound += self.io.chain_rows("stage_score")
+            # the manifest bound (free, no count job) is passed ONLY when
+            # it takes the exact single-task solve: a corpus-loose bound
+            # above the cutover must not widen the LS/SS init exchange
+            merged = merge_components(
+                old, edges, n_edges=bound if bound <= LOCAL_CC_MAX_EDGES else None
+            )
+            # candidates no edge touches -> singleton clusters (same
             # convention as the batch stage_cluster)
-            singles = (
-                delta_ids.join(merged.select("mention_id"), "mention_id", "anti")
-                .withColumn("cluster_id", F.col("mention_id"))
+            ends = edges.select(F.explode(F.array("src", "dst")).alias("mention_id"))
+            singles = cand.join(ends, "mention_id", "anti").withColumn(
+                "cluster_id", F.col("mention_id")
             )
             pipe.write("cluster", merged.unionByName(singles),
                        stage="cluster_merge", tag=tag)

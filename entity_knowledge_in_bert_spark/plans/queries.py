@@ -1315,7 +1315,7 @@ FROM w
 def mm_extract_features(spark, sf_dir):
     """Feature extraction over the stubbed decoder. The fake decode is a
     closed form over payload byte strides (operators/multimodal.py
-    ``_fake_decode``), so the oracle reproduces it with DuckDB list
+    ``decode_asset``), so the oracle reproduces it with DuckDB list
     lambdas: byte i of the utf-8 payload == unicode code point of char
     i+1 — valid ONLY for pure-ASCII documents, and ENFORCED in the
     oracle's first CTE (ADVICE r3): a non-ASCII document raises a
@@ -1904,14 +1904,10 @@ def er_block_size_histogram(spark, sf_dir):
     trade rather than a silent one (ADVICE r1)."""
     from .. import datagen
     from ..operators import blocking, mentions
-    from ..operators.extract import with_extracted_text
+    from .pipeline import extract_plan
 
-    n = _er_scale(sf_dir)
-    pages = datagen.gen_pages_df(spark, n)
-    latest = mentions.latest_snapshot(mentions.english_pages(pages))
-    extracted = with_extracted_text(latest).select(
-        "url", F.col("text_extracted").alias("text")
-    )
+    pages = datagen.gen_pages_df(spark, _er_scale(sf_dir))
+    extracted = mentions.latest_snapshot(extract_plan(mentions.english_pages(pages)))
     aliases = datagen.alias_df(spark)
     m = mentions.detect_mentions(extracted, aliases)
     cand = mentions.candidate_entities(m, aliases)

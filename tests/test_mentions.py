@@ -11,10 +11,27 @@ from entity_knowledge_in_bert_spark import datagen
 from entity_knowledge_in_bert_spark.operators import mentions
 
 
+def _tokens_with_offsets(pages, text_col="text"):
+    """(url, pos, tok, offset): char offset of each whitespace token (the
+    legacy per-url window-cumsum tokenizer)."""
+    toks = pages.select(
+        "url", F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok")
+    )
+    w = (
+        Window.partitionBy("url")
+        .orderBy("pos")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return toks.withColumn(
+        "offset",
+        F.coalesce(F.sum(F.length("tok") + 1).over(w), F.lit(0)).cast("int"),
+    )
+
+
 def _legacy_detect_mentions(pages, aliases, max_alias_tokens: int = 3):
     """The pre-r7 formulation, verbatim (window offsets + lead n-grams +
     ctx join-back) — kept here as the equality reference."""
-    toks = mentions.tokens_with_offsets(pages)
+    toks = _tokens_with_offsets(pages)
     w = Window.partitionBy("url").orderBy("pos")
     grams = toks
     for k in range(1, max_alias_tokens):

@@ -56,17 +56,3 @@ def test_array_expansion_matches_legacy_join(spark):
     }
     assert new == old
 
-
-def test_exhaustive_path_unchanged(spark):
-    keys = spark.createDataFrame(
-        [(i, "k") for i in range(6)] + [(i, "k2") for i in range(3)],
-        "mention_id long, block_key string",
-    )
-    got = {
-        (r["mention_a"], r["mention_b"])
-        for r in within_block_pairs(keys, window=None).collect()
-    }
-    want = {(i, j) for i in range(6) for j in range(i + 1, 6)} | {
-        (i, j) for i in range(3) for j in range(i + 1, 3)
-    }
-    assert got == want

@@ -33,21 +33,32 @@ def retract_run(spark, tmp_path_factory):
     delta = datagen.gen_pages_df(
         spark, N_RECRAWL, start=0, generation=1
     ).unionByName(datagen.gen_pages_df(spark, N_NEW, start=N_BASE))
-    merged = IncrementalER(spark, io).merge(delta)
+    # capture the physical plan of the merge's cluster write
+    cluster_plans = []
+    write = TableIO.write
+
+    def spy(self, df, table, *args, **kwargs):
+        if table == "stage_cluster":
+            cluster_plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(self, df, table, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(TableIO, "write", spy)
+        merged = IncrementalER(spark, io).merge(delta)
 
     # batch rebuild over the union corpus — the as-of rule (J7) picks the
     # generation-1 snapshot for the re-crawled urls
     io_b = TableIO(spark, str(tmp_path_factory.mktemp("wh_retract_batch")))
     union_pages = datagen.gen_pages_df(spark, N_BASE).unionByName(delta)
     batch = ERPipeline(spark, io_b).run(union_pages)
-    return io, io_b, merged, batch
+    return io, io_b, merged, batch, cluster_plans
 
 
 def test_live_mentions_equal_batch(spark, retract_run):
     """(stage_mention chain − tombstones) must equal the batch rebuild's
     mention table: old mentions of re-crawled urls are gone, re-emitted
     identical spans survive once, new spans appear."""
-    io, io_b, _, _ = retract_run
+    io, io_b, _, _, _ = retract_run
     inc = IncrementalER(spark, io)
     live = _ids(inc._live(io.read("stage_mention")))
     bat = _ids(io_b.read("stage_mention"))
@@ -57,7 +68,7 @@ def test_live_mentions_equal_batch(spark, retract_run):
 def test_tombstones_are_real_retractions(spark, retract_run):
     """Tombstoned ids existed in the base mention table and are absent
     from the batch rebuild (they belonged to superseded content)."""
-    io, io_b, _, _ = retract_run
+    io, io_b, _, _, _ = retract_run
     tomb = _ids(io.read("retracted_mentions"))
     assert tomb  # generation-1 content genuinely changed mentions
     base_ids = _ids(io.read("stage_mention"))
@@ -67,18 +78,27 @@ def test_tombstones_are_real_retractions(spark, retract_run):
 
 
 def test_cluster_table_excludes_retracted(spark, retract_run):
-    io, io_b, merged, batch = retract_run
+    io, io_b, merged, batch, _ = retract_run
     tomb = _ids(io.read("retracted_mentions"))
     clus = _ids(merged)
     assert not (tomb & clus)
     assert clus == _ids(batch)  # mention-complete over the same live set
 
 
+def test_recrawl_merge_runs_one_cc_solve(retract_run):
+    """A re-crawl merge re-clusters with ONE connected-components solve:
+    retraction is folded into merge_components' input, so the cluster
+    write plan holds a single MapInPandas (the local CC kernel)."""
+    plans = retract_run[4]
+    assert len(plans) == 1
+    assert plans[0].count("MapInPandas") == 1, plans[0]
+
+
 def test_retract_f1_gate_vs_batch(spark, retract_run):
     """North-star gate on the retracted+merged cluster table, evaluated
     on the BATCH rebuild's labeled pairs over the reconciled corpus with
     generation-aware gold."""
-    io, io_b, merged, _ = retract_run
+    io, io_b, merged, _, _ = retract_run
     gold = (
         datagen.gen_gold_df(spark, N_RECRAWL, start=0, generation=1)
         .unionByName(
@@ -180,7 +200,7 @@ def test_late_arrival_is_dropped(spark, retract_run):
     """Re-delivering the ORIGINAL generation-0 snapshots of re-crawled
     urls (warc_ts older than the stored generation-1 extract) must be a
     clean no-op under the as-of rule."""
-    io, _, merged, _ = retract_run
+    io, _, merged, _, _ = retract_run
     before = _cluster_set(io.read("stage_cluster"))
     stale = datagen.gen_pages_df(spark, 30, start=0)  # generation 0 again
     out = IncrementalER(spark, io).merge(stale)
