@@ -14,9 +14,10 @@ corpus, so the engine adds the incremental path as a first-class plan:
       -> score  (same kernels/thresholds as batch)
       -> merge_components (re-clusters ONLY touched components)
 
-The extract, mention, block and score plans and every stage write are
-the batch pipeline's own (plans/pipeline.py): the delta runs them on
-append-only reads and writes in append mode.
+IncrementalER subclasses the batch pipeline (plans/pipeline.py): the
+extract, mention, block and score plans, every stage write, the stage
+timer and the blocking constants are inherited, and the delta runs them
+on append-only reads and writes in append mode.
 
 Every table write is an APPEND snapshot (TableIO includes-chain /
 Iceberg fast-append) except the output cluster table, which is replaced.
@@ -45,30 +46,23 @@ the corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import blocking, mentions, pairs
 from ..operators.cluster import LOCAL_CC_MAX_EDGES
 from ..operators.incremental import merge_components
-from ..sources.tableio import TableIO
 from .pipeline import ERPipeline, extract_plan
 
 
-class IncrementalER:
+class IncrementalER(ERPipeline):
     """Delta merge over a warehouse previously built by ERPipeline.run().
 
-    Runs the batch pipeline's stage builders on the delta, with its
-    frozen artifacts (model_idf, block_salts) so delta mentions embed
-    and block IDENTICALLY to the base run — the invariant that makes
-    cross(base, delta) pairs discoverable at all.
+    Runs the inherited stage builders on the delta, with its frozen
+    artifacts (model_idf, block_salts) so delta mentions embed and block
+    IDENTICALLY to the base run — the invariant that makes cross(base,
+    delta) pairs discoverable at all.
     """
-
-    def __init__(self, spark: SparkSession, io: TableIO, max_block: int = 64):
-        self.spark = spark
-        self.io = io
-        self.max_block = max_block
-        self.timings: dict[str, float] = {}
 
     def _frozen_idf(self) -> dict[str, float]:
         rows = self.io.read("model_idf").collect()  # bounded: <= max_vocab
@@ -102,14 +96,9 @@ class IncrementalER:
         attempt can be rolled back atomically before a replay
         (TableIO.rollback_tag — the streaming foreachBatch exactly-once
         contract)."""
-        pipe = ERPipeline(self.spark, self.io, self.max_block)
-        pipe.timings = self.timings
         w = {"append": True, "tag": tag}
 
-        with pipe.timed("extract"):
-            # a chain read resolves ONE footer's schema: the delta's edges
-            # carry block_key exactly when the stored chain's do
-            pipe.block_contract = "block_key" in self.io.read("stage_score").columns
+        with self.timed("extract"):
             # -- recrawl reconciliation, BEFORE extraction so the
             # extractor never runs on rows it then drops: one bounded
             # action — which delta urls are genuinely newer than the
@@ -128,11 +117,11 @@ class IncrementalER:
             )
             recrawled = fresh.filter(F.col("_base_ts").isNotNull()).select("url")
             n_recrawled = recrawled.count()
-            ex_snap = pipe.write("extract", extract_plan(fresh), **w)
+            ex_snap = self.write("extract", extract_plan(fresh), **w)
 
-        with pipe.timed("mention"):
+        with self.timed("mention"):
             # incremental read: ONLY the files the delta append wrote
-            m = pipe.mention_plan(
+            m = self.mention_plan(
                 self.io.read("stage_extract", ex_snap.snapshot_id, chain=False),
                 self._frozen_idf(),
             )
@@ -186,9 +175,9 @@ class IncrementalER:
                     # resurrected ids keep their stored base row — do not
                     # append a second copy
                     m = m.join(resurrected, "mention_id", "left_anti")
-            m_snap = pipe.write("mention", m, **w)
+            m_snap = self.write("mention", m, **w)
 
-        with pipe.timed("block"):
+        with self.timed("block"):
             delta_m = self.io.read("stage_mention", m_snap.snapshot_id, chain=False)
             delta_ids = delta_m.select("mention_id")
             if resurrected is not None:
@@ -196,7 +185,7 @@ class IncrementalER:
                 # delta members: their stored rows are live again but they
                 # left the cluster table when they were retracted
                 delta_ids = delta_ids.unionByName(resurrected).distinct()
-            k_snap = pipe.block(
+            k_snap = self.block(
                 delta_m, frozen_salts=self.io.read("block_salts"), **w
             )
             delta_keys = self.io.read("stage_block", k_snap.snapshot_id, chain=False)
@@ -230,7 +219,7 @@ class IncrementalER:
             # the same recall trade the cap itself makes.
             touched_keys = blocking.cap_by_size(touched_keys, self.max_block)
 
-        with pipe.timed("pairs"):
+        with self.timed("pairs"):
             # within touched blocks, >=1 delta side
             p = pairs.within_block_pairs(touched_keys)
             has_delta_a = p.join(
@@ -243,13 +232,13 @@ class IncrementalER:
             )
             new_pairs = has_delta_a.unionByName(has_delta_b).distinct()
 
-        with pipe.timed("score"):
-            score_snap = pipe.score(
+        with self.timed("score"):
+            score_snap = self.score(
                 new_pairs, self._live(self.io.read("stage_mention")), **w
             )
             edges = self.io.read("stage_score", score_snap.snapshot_id, chain=False)
 
-        with pipe.timed("cluster"):
+        with self.timed("cluster"):
             # ONE solve re-clusters only the touched components. A
             # retraction can SPLIT a component (removing a node is not a
             # min-merge), so the clusters that held a retracted mention
@@ -293,6 +282,6 @@ class IncrementalER:
             singles = cand.join(ends, "mention_id", "anti").withColumn(
                 "cluster_id", F.col("mention_id")
             )
-            pipe.write("cluster", merged.unionByName(singles),
+            self.write("cluster", merged.unionByName(singles),
                        stage="cluster_merge", tag=tag)
         return self.io.read("stage_cluster")

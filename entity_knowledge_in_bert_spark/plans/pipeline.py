@@ -9,9 +9,9 @@ and writes a new snapshot + lineage, mirroring the reference's
 that is the resume path (t5).
 
 Every stage plan is defined once, here. The delta merge
-(plans/incremental.py) calls the same builders and the same write helper
-on its append-only reads; it differs only in input scope, write mode
-(``append=True, tag=...``) and its delta-only steps.
+(plans/incremental.py, a subclass) calls the same builders and the same
+write helper on its append-only reads; it differs only in input scope,
+write mode (``append=True, tag=...``) and its delta-only steps.
 """
 
 from __future__ import annotations
@@ -56,24 +56,23 @@ def extract_plan(pages: DataFrame) -> DataFrame:
 
 
 class ERPipeline:
-    def __init__(
-        self,
-        spark: SparkSession,
-        io: TableIO,
-        max_block: int = 64,
-        block_contract: bool = True,
-    ):
-        """``block_contract``: carry the blocking key onto the match-edge
-        table and group-contract each block's matched subgraph in the CC
-        init (cluster.connected_components(contract_by=)). Same cluster
-        table either way (equality-tested); the measurements behind the
-        default are in BASELINE.md (r7). The delta merge reads the
-        setting from the stored stage_score schema, so a warehouse's
-        base and delta snapshots always agree."""
+    """The staged batch build. Its blocking cap and its block contraction
+    are class constants, not options: the delta merge (IncrementalER, a
+    subclass) inherits them, so a warehouse's base and delta snapshots
+    always block with the same cap and store the same edge schema.
+
+    Block contraction: the match-edge table always carries ``block_key``
+    and the CC init group-contracts each block's matched subgraph
+    (cluster.connected_components(contract_by=)); the measurements are in
+    BASELINE.md (r7). No code branches on the constant; it names the
+    setting for the benchmark's operator probes."""
+
+    max_block = blocking.DEFAULT_MAX_BLOCK
+    block_contract = True
+
+    def __init__(self, spark: SparkSession, io: TableIO):
         self.spark = spark
         self.io = io
-        self.max_block = max_block
-        self.block_contract = block_contract
         self.timings: dict[str, float] = {}
 
     # -- shared by the batch stages and the delta merge --------------------
@@ -164,8 +163,8 @@ class ERPipeline:
             p, m, broadcast_mentions=self._broadcast_mentions()
         )
         scored = scoring.score_pairs(feat, datagen.alias_df(self.spark))
-        keep = ("block_key",) if self.block_contract else ()
-        return self.write("score", scoring.match_edges(scored, keep=keep), **kw)
+        edges = scoring.match_edges(scored, keep=("block_key",))
+        return self.write("score", edges, **kw)
 
     # -- batch stages: read prev snapshot -> transform -> write snapshot ----
     def stage_extract(self, pages: DataFrame) -> None:
@@ -247,7 +246,7 @@ class ERPipeline:
         comp = cluster.connected_components(
             edges, on_iteration=per_iter, start_frontier=start,
             n_edges=self.io.chain_rows("stage_score"),
-            contract_by="block_key" if self.block_contract else None,
+            contract_by="block_key",
         )
         # comp has one row per edge-incident mention, so it is bounded by
         # the mention count: broadcast it into the left join while the

@@ -1,19 +1,17 @@
-"""Fixed, explicit schemas — the single source of truth (SURVEY.md §1.2).
+"""Declared input schemas (SURVEY.md §1.2).
 
 The reference keeps dynamic Python/pickle types (``vocab.py``,
-``pipeline_job.py`` artifacts [R]); this engine declares every table shape
-up front so Catalyst can prune/push down and so the Arrow boundary is typed.
+``pipeline_job.py`` artifacts [R]); this engine declares its input table
+shapes up front so Catalyst can prune/push down and so the Arrow boundary
+is typed. Stage tables take the schema of the plan that writes them; the
+manifest records it per snapshot.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    BooleanType,
     DoubleType,
-    FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -43,89 +41,5 @@ ALIASES = StructType(
         StructField("entity", StringType(), False),
         StructField("cnt", LongType(), False),
         StructField("prior", DoubleType(), False),
-    ]
-)
-
-# Mentions: reference's (article, span, surface, entity) tuples
-# (create_wiki_training_data.py [R]) as a flat table.
-MENTIONS = StructType(
-    [
-        StructField("mention_id", LongType(), False),
-        StructField("url", StringType(), False),
-        StructField("begin", IntegerType(), False),
-        StructField("end", IntegerType(), False),
-        StructField("surface", StringType(), False),
-        StructField("ctx", StringType(), True),
-        StructField("entity_gold", StringType(), True),
-    ]
-)
-
-# Candidate pairs after blocking, before scoring.
-PAIRS = StructType(
-    [
-        StructField("block_key", StringType(), False),
-        StructField("mention_a", LongType(), False),
-        StructField("mention_b", LongType(), False),
-        StructField("surface_a", StringType(), False),
-        StructField("surface_b", StringType(), False),
-    ]
-)
-
-# Match edges after scoring + threshold.
-EDGES = StructType(
-    [
-        StructField("src", LongType(), False),
-        StructField("dst", LongType(), False),
-        StructField("score", DoubleType(), False),
-    ]
-)
-
-# Cluster assignment (output of connected components).
-CLUSTERS = StructType(
-    [
-        StructField("mention_id", LongType(), False),
-        StructField("cluster_id", LongType(), False),
-    ]
-)
-
-# Labeled pairs fixture (AIDA-CoNLL-style; FIXTURES.md A4).
-LABELED_PAIRS = StructType(
-    [
-        StructField("mention_a", LongType(), False),
-        StructField("mention_b", LongType(), False),
-        StructField("block_key", StringType(), False),
-        StructField("same_entity", BooleanType(), False),
-    ]
-)
-
-# Per-stage lineage rows (north_rule: per-partition lineage + counters).
-LINEAGE = StructType(
-    [
-        StructField("stage", StringType(), False),
-        StructField("run_id", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("rows_out", LongType(), False),
-        StructField("input_snapshot", StringType(), True),
-        StructField("wrote_ts", TimestampType(), False),
-    ]
-)
-
-# Mention embeddings (frozen-encoder output, E3).
-MENTION_VECS = StructType(
-    [
-        StructField("mention_id", LongType(), False),
-        StructField("vec", ArrayType(FloatType()), False),
-    ]
-)
-
-# Multimodal assets: opaque binary payload + typed metadata (driver mandate).
-ASSETS = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("payload", BinaryType(), False),
-        StructField("meta_width", IntegerType(), True),
-        StructField("meta_height", IntegerType(), True),
-        StructField("meta_duration_ms", IntegerType(), True),
     ]
 )

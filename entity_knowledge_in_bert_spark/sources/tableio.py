@@ -93,7 +93,6 @@ class TableIO:
         df: DataFrame,
         table: str,
         stage: str | None = None,
-        run_id: str | None = None,
         inputs: list | None = None,
         append: bool = False,
         tag: str | None = None,
@@ -161,10 +160,8 @@ class TableIO:
             # ZERO extra Spark jobs: every task of the write job produced
             # one parquet file, so per-partition row counts come straight
             # from the file footers (pyarrow metadata, driver-side).
-            # Footer reads are IO-bound and independent — a thread pool
-            # keeps this stage barrier flat in file count (hundreds of
-            # files per snapshot at bench scale; sequential reads were a
-            # measurable slice of the pipeline's serial cost).
+            # Footer reads are IO-bound and independent, so a thread pool
+            # keeps this barrier flat in file count (BASELINE.md).
             from concurrent.futures import ThreadPoolExecutor
 
             files = sorted(
@@ -204,7 +201,7 @@ class TableIO:
         self._save_manifest(table, manifest)
 
         if stage is not None:
-            run = run_id or uuid.uuid4().hex[:12]
+            run = uuid.uuid4().hex[:12]
             # lineage is driver-tiny: write it with pyarrow directly (no
             # Spark job); Spark reads it back fine via read.parquet
             import pyarrow as pa
@@ -344,9 +341,7 @@ class TableIO:
             *(os.path.join(self.warehouse, table, s["snapshot_id"]) for s in entries)
         )
 
-    def compact(
-        self, table: str, run_id: str | None = None, prune: bool = False
-    ) -> SnapshotInfo | None:
+    def compact(self, table: str, prune: bool = False) -> SnapshotInfo | None:
         """Fold the head snapshot's append chain into ONE fresh snapshot
         (the Iceberg ``rewrite_data_files`` maintenance shape).
 
@@ -412,7 +407,6 @@ class TableIO:
             self.read(table),
             table,
             stage="compact",
-            run_id=run_id,
             inputs=[head],
             metrics={"snapshots_folded": len(chain)},
             entry_extra=(

@@ -52,17 +52,6 @@ def main() -> None:
                     help="with --stage all: resume from this stage")
     ap.add_argument("--warehouse", default="/tmp/er_warehouse")
     ap.add_argument("--n-pages", type=int, default=4000)
-    ap.add_argument("--max-block", type=int, default=64)
-    ap.add_argument(
-        "--block-contract",
-        action=argparse.BooleanOptionalAction,
-        default=True,
-        help="carry the blocking key onto the match edges and "
-        "group-contract each block's matched subgraph in the CC init "
-        "(ERPipeline block_contract; default ON — disable with "
-        "--no-block-contract). Batch stages only: merge-delta follows "
-        "the stored stage_score schema",
-    )
     ap.add_argument("--make-zip", default=None, metavar="PATH")
     args = ap.parse_args()
 
@@ -71,15 +60,14 @@ def main() -> None:
         return
 
     from entity_knowledge_in_bert_spark import datagen
-    from entity_knowledge_in_bert_spark.plans.pipeline import ERPipeline
+    from entity_knowledge_in_bert_spark.plans.incremental import IncrementalER
+    from entity_knowledge_in_bert_spark.plans.pipeline import STAGES, ERPipeline
     from entity_knowledge_in_bert_spark.session import get_spark
     from entity_knowledge_in_bert_spark.sources.tableio import TableIO
 
     spark = get_spark("er-pipeline")
     spark.sparkContext.setLogLevel("WARN")
     io = TableIO(spark, args.warehouse)
-    pipe = ERPipeline(spark, io, max_block=args.max_block,
-                      block_contract=args.block_contract)
 
     t0 = time.time()
     if args.stage == "compact":
@@ -91,9 +79,7 @@ def main() -> None:
         # retracted_mentions grows an append chain on every re-crawl
         # merge too (stage retract_delta) — without compaction its
         # footer fan-out grows unboundedly at steady state (ADVICE r6)
-        for t in ("stage_extract", "stage_mention", "stage_block",
-                  "stage_pairs", "stage_score", "stage_cluster",
-                  "retracted_mentions"):
+        for t in [f"stage_{s}" for s in STAGES] + ["retracted_mentions"]:
             if io.exists(t):
                 info = io.compact(t)
                 folded[t] = info.rows if info is not None else "no-chain"
@@ -105,18 +91,10 @@ def main() -> None:
         }))
         spark.stop()
         return
+    pipe = (IncrementalER if args.stage == "merge-delta" else ERPipeline)(spark, io)
     if args.stage == "merge-delta":
-        from entity_knowledge_in_bert_spark.plans.incremental import (
-            IncrementalER,
-        )
-
         start = args.delta_start if args.delta_start is not None else args.n_pages
-        delta = datagen.gen_pages_df(spark, args.n_pages, start=start)
-        # the delta carries block_key exactly when the stored stage_score
-        # does (IncrementalER reads it from the schema)
-        inc = IncrementalER(spark, io, max_block=args.max_block)
-        out = inc.merge(delta)
-        pipe = inc  # stage_sec reporting below reads .timings
+        out = pipe.merge(datagen.gen_pages_df(spark, args.n_pages, start=start))
     elif args.stage == "all":
         pages = datagen.gen_pages_df(spark, args.n_pages)
         from_stage = args.from_stage or "extract"

@@ -133,13 +133,20 @@ def test_incremental_f1_gate(spark, incr_run):
 
 def test_delta_appends_are_delta_sized(spark, incr_run):
     """chain=False on the delta snapshot reads ONLY the delta's rows —
-    the O(delta) write/read contract."""
+    the O(delta) write/read contract. Every stage_score snapshot of the
+    chain, base and delta append alike, carries block_key: a chain read
+    resolves one footer's schema, so a mixed chain would drop or null it."""
     io, _, _, _ = incr_run
     man_rows = io.read("stage_extract").count()
     delta_rows = io.read(
         "stage_extract", io.latest_snapshot("stage_extract"), chain=False
     ).count()
     assert 0 < delta_rows < man_rows
+    head = io.snapshot_entry("stage_score")
+    chain = [head["snapshot_id"], *head["includes"]]
+    assert len(chain) == 2  # the base snapshot + the delta's append
+    for sid in chain:
+        assert "block_key" in io.read("stage_score", sid, chain=False).columns
 
 
 def test_block_delta_lineage_carries_cap_metrics(spark, incr_run):

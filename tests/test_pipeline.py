@@ -124,52 +124,6 @@ def test_determinism_two_runs(spark, tmp_path_factory):
     assert hashes[0] == hashes[1]
 
 
-@pytest.fixture(scope="module")
-def contract_off_run(spark, tmp_path_factory):
-    """A base build with block_contract pinned OFF: (io, cluster rows)."""
-    io = TableIO(spark, str(tmp_path_factory.mktemp("wh_bcontract_off")))
-    clusters = ERPipeline(spark, io, block_contract=False).run(
-        datagen.gen_pages_df(spark, N_PAGES)
-    )
-    assert "block_key" not in io.read("stage_score").columns
-    return io, {(r["mention_id"], r["cluster_id"]) for r in clusters.collect()}
-
-
-def test_block_contract_pipeline_identical(spark, contract_off_run, tmp_path_factory):
-    """block_contract carries the blocking key onto the edge table and
-    group-contracts each block's matched subgraph in the CC init: the
-    full pipeline output must be row-identical to an EXPLICITLY
-    contract-off run (both sides pinned so the test stays discriminating
-    whatever the constructor default is), and the stored edge table must
-    actually carry the key (the contraction is exercised, not skipped)."""
-    _, a = contract_off_run
-    wh = str(tmp_path_factory.mktemp("wh_bcontract"))
-    io2 = TableIO(spark, wh)
-    pipe = ERPipeline(spark, io2, block_contract=True)
-    clusters2 = pipe.run(datagen.gen_pages_df(spark, N_PAGES))
-    assert "block_key" in io2.read("stage_score").columns
-    b = {(r["mention_id"], r["cluster_id"]) for r in clusters2.collect()}
-    assert a == b
-
-
-def test_delta_merge_follows_stored_block_contract(spark, contract_off_run):
-    """The delta merge reads block_contract from the stored stage_score
-    schema: merged into a contract-off base, no stage_score snapshot in
-    the chain carries block_key (a mixed chain would resolve one
-    footer's schema and drop or null the column)."""
-    from entity_knowledge_in_bert_spark.plans.incremental import IncrementalER
-
-    io, _ = contract_off_run
-    IncrementalER(spark, io).merge(
-        datagen.gen_pages_df(spark, 20, start=N_PAGES)
-    )
-    head = io.snapshot_entry("stage_score")
-    chain = [head["snapshot_id"], *head["includes"]]
-    assert len(chain) == 2  # the base snapshot + the delta's append
-    for sid in chain:
-        assert "block_key" not in io.read("stage_score", sid, chain=False).columns
-
-
 def test_onnx_encoder_branch_session_lifecycle(spark):
     """VERDICT r3 #6: drive the production ONNX-shaped encoder branch
     with a FAKE InferenceSession (cloudpickled by value into the

@@ -15,26 +15,34 @@ SPARK_SUBMIT = shutil.which("spark-submit")
 
 @pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
 def test_spark_submit_py_files(tmp_path):
+    """A batch build, then a delta merge of 20 new pages into the same
+    warehouse, each submitted through the CLI."""
     zip_path = str(tmp_path / "er_pipeline.zip")
     subprocess.run(
         [sys.executable, os.path.join(ROOT, "main.py"), "--make-zip", zip_path],
         check=True, capture_output=True, cwd=ROOT,
     )
     wh = str(tmp_path / "wh")
-    out = subprocess.run(
-        [SPARK_SUBMIT, "--master", "local[4]", "--py-files", zip_path,
-         os.path.join(ROOT, "main.py"), "--stage", "all",
-         "--n-pages", "200", "--warehouse", wh],
-        capture_output=True, text=True, timeout=600, cwd=str(tmp_path),
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    rec = json.loads(
-        [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    )
+
+    def submit(*args):
+        out = subprocess.run(
+            [SPARK_SUBMIT, "--master", "local[4]", "--py-files", zip_path,
+             os.path.join(ROOT, "main.py"), *args, "--warehouse", wh],
+            capture_output=True, text=True, timeout=600, cwd=str(tmp_path),
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        return json.loads(
+            [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
+        )
+
+    stages = {"extract", "mention", "block", "pairs", "score", "cluster"}
+    rec = submit("--stage", "all", "--n-pages", "200")
     assert rec["stage"] == "all" and rec["rows_out"] > 0
-    assert set(rec["stage_sec"]) == {
-        "extract", "mention", "block", "pairs", "score", "cluster"
-    }
+    assert set(rec["stage_sec"]) == stages
+    rec = submit("--stage", "merge-delta", "--n-pages", "20",
+                 "--delta-start", "200")
+    assert rec["stage"] == "merge-delta"
+    assert set(rec["stage_sec"]) == stages
 
 
 def test_registry_order_is_staleness_driven(tmp_path, monkeypatch):

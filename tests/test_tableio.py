@@ -221,7 +221,7 @@ def test_iceberg_write_branch(tmp_path):
     fake = _IcebergSpark()
     io2 = TableIO(fake, str(tmp_path / "iwh"), catalog="ice")
     log = []
-    info = io2.write(_IcebergDF(log), "pages", stage="s1", run_id="r1")
+    info = io2.write(_IcebergDF(log), "pages", stage="s1")
     assert ("writeTo", "ice.er.pages") in log
     assert ("createOrReplace",) in log and ("append",) not in log
     assert info.snapshot_id == "101" and info.rows == 7
