@@ -92,10 +92,17 @@ class IncrementalER(ERPipeline):
         its stored context embedding even if surrounding text drifted
         (identity is span-based; refreshed by the next full rebuild).
 
-        ``tag`` labels every snapshot this merge writes so a failed
-        attempt can be rolled back atomically before a replay
-        (TableIO.rollback_tag — the streaming foreachBatch exactly-once
-        contract)."""
+        ``tag`` makes the merge exactly-once under replay (the streaming
+        foreachBatch contract): every snapshot it writes carries the tag,
+        and the ``stage_cluster`` write, the merge's last, is its
+        completion record. A merge whose tag ``stage_cluster`` already
+        holds is skipped; otherwise the partial snapshots of a crashed
+        attempt are rolled back (TableIO.rollback_tag) before the first
+        write."""
+        if tag is not None:
+            if self.io.has_tag("stage_cluster", tag):
+                return self.io.read("stage_cluster")
+            self.io.rollback_tag(tag)
         w = {"append": True, "tag": tag}
 
         with self.timed("extract"):

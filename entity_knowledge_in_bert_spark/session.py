@@ -35,10 +35,8 @@ ENGINE_CONFS: dict[str, str] = {
     # (measured: mention stage 6.9 s -> 2.6 s at 20k pages) and is
     # size-neutral at scale: with parallelismFirst=true, coalescing
     # only ever MERGES below-floor partitions, and any shuffle larger
-    # than (width x floor) bytes is untouched either way. Parameterised
-    # for clusters that want larger output files from tiny stages.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize":
-        os.environ.get("SPARK_GRAFT_AQE_MIN_PART", "64k"),
+    # than (width x floor) bytes is untouched either way.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
 }
 
 

@@ -363,7 +363,7 @@ class TableIO:
         the old manifest entries while their rows live on in the
         compacted head would duplicate rows on replay. Compact only
         when no merge attempt may still need rollback (i.e. between
-        micro-batches, after ``mark_merge_complete``).
+        micro-batches, after the merge returned).
 
         ``prune=True`` additionally drops the folded chain's manifest
         entries (ending time travel to them) and deletes their
@@ -453,37 +453,10 @@ class TableIO:
     # -- exactly-once merge bookkeeping -------------------------------------
     # foreachBatch is at-least-once: a micro-batch replayed after a
     # mid-merge crash would re-append identical rows into the append
-    # chains. The contract here: every write of one merge attempt carries
-    # the same ``tag``; the caller records the tag as complete ONLY after
-    # the whole merge committed, and rolls the tag back before retrying.
-    # Reads resolve through the manifest, so dropping tagged manifest
-    # entries makes the partial attempt invisible (its orphaned files are
-    # never referenced — the Iceberg orphan-file shape).
-
-    def _merges_path(self) -> str:
-        return os.path.join(self.warehouse, "_merges.json")
-
-    def merge_complete(self, tag: str) -> bool:
-        """Has a merge with this tag fully committed?"""
-        p = self._merges_path()
-        if not os.path.exists(p):
-            return False
-        with open(p) as f:
-            return tag in json.load(f)["tags"]
-
-    def mark_merge_complete(self, tag: str) -> None:
-        """Atomically record ``tag`` as fully merged (idempotent)."""
-        p = self._merges_path()
-        rec = {"tags": []}
-        if os.path.exists(p):
-            with open(p) as f:
-                rec = json.load(f)
-        if tag not in rec["tags"]:
-            rec["tags"].append(tag)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(rec, f, indent=1)
-        os.replace(tmp, p)
+    # chains. Every write of one merge attempt carries the same ``tag``
+    # (IncrementalER.merge runs the protocol); rolling the tag back drops
+    # the attempt's manifest entries, so reads resolve past it (its
+    # orphaned files are never referenced — the Iceberg orphan-file shape).
 
     def _manifests(self):
         """(table, manifest) for every table in the warehouse."""
@@ -493,75 +466,37 @@ class TableIO:
             if os.path.exists(self._manifest_path(t)):
                 yield t, self._load_manifest(t)
 
-    def has_tag(self, tag: str) -> bool:
-        """Does ANY table manifest hold a snapshot labeled ``tag``?
-        True means a prior merge attempt with this tag left partial work
-        behind — replaying the merge WITHOUT rolling the tag back would
-        append duplicate rows. Manifest bookkeeping is backend-agnostic,
-        so this works identically on parquet and Iceberg storage."""
+    def has_tag(self, table: str, tag: str) -> bool:
+        """Does ``table``'s manifest hold a snapshot labeled ``tag``?
+        Manifest bookkeeping is backend-agnostic, so this works
+        identically on parquet and Iceberg storage."""
         return any(
-            s.get("tag") == tag
-            for _, manifest in self._manifests()
-            for s in manifest["snapshots"]
+            s.get("tag") == tag for s in self._load_manifest(table)["snapshots"]
         )
-
-    def try_rollback_tag(self, tag: str, allow_at_least_once: bool = False) -> int:
-        """Backend-aware rollback: on the parquet backend, drop the tag's
-        partial snapshots (full exactly-once). On the Iceberg catalog
-        backend — where tag rollback needs WAP/branch commits that are
-        not wired in this sandbox — duplication-aware (ADVICE r4):
-
-        * no partial tagged snapshots exist (the common case — crash-free
-          run, or a replay of a batch that never got to write): nothing
-          to roll back, return 0, exactly-once holds;
-        * partial snapshots DO exist and ``allow_at_least_once`` is False
-          (default): HARD-FAIL — replaying would append duplicate rows
-          into the append chains (and can silently lose resurrected ids
-          if the crash landed after a tombstone compact), and a
-          warnings.warn inside a foreachBatch worker is easy to lose;
-        * partial snapshots exist and the caller opted in: WARN and
-          degrade to at-least-once for the one replayed batch."""
-        if self.catalog:
-            if not self.has_tag(tag):
-                return 0  # nothing partial: replay is still exactly-once
-            if not allow_at_least_once:
-                raise RuntimeError(
-                    f"partial snapshots tagged {tag!r} exist but tag "
-                    "rollback is not wired on the Iceberg catalog backend "
-                    "(needs WAP/branch commits): replaying this micro-batch "
-                    "would append duplicate rows. Pass "
-                    "allow_at_least_once=True (stream_incremental_er "
-                    "forwards it) to accept at-least-once for this batch, "
-                    "or roll the table back out-of-band."
-                )
-            import warnings
-
-            warnings.warn(
-                "tag rollback is not wired on the Iceberg catalog backend; "
-                f"skipping rollback of tag {tag!r} — a replayed partially-"
-                "committed micro-batch degrades to at-least-once",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            return 0
-        return self.rollback_tag(tag)
 
     def rollback_tag(self, tag: str) -> int:
         """Drop every snapshot labeled ``tag`` from every table manifest
         (the partial work of a failed merge attempt); returns the number
         of snapshots dropped. Data files are orphaned, not deleted —
-        nothing references them after the manifest swap. On the Iceberg
-        backend the equivalent is a WAP/branch commit or
-        ``rollback_to_snapshot``; not wired in this sandbox."""
-        if self.catalog:
-            raise NotImplementedError(
-                "tag rollback on the Iceberg backend requires WAP/branch "
-                "commits (not available in this sandbox)"
-            )
-        # check every table before dropping anything: a folded tag must
-        # leave all manifests untouched
+        nothing references them after the manifest swap.
+
+        Refuses with RuntimeError, changing no manifest, when the tag's
+        rows are no longer separable: the tag was folded into a compacted
+        snapshot, or a snapshot without the tag includes a tagged one
+        (dropping the tagged entry would cut that snapshot's chain and
+        lose every row below it). On the Iceberg catalog backend, where
+        rollback needs WAP/branch commits that are not wired here, it
+        returns 0 when no manifest holds the tag and raises otherwise."""
+        # check every table before dropping anything: a refused rollback
+        # must leave all manifests untouched
         manifests = list(self._manifests())
+        dropped = 0
         for t, manifest in manifests:
+            tagged = {
+                s["snapshot_id"] for s in manifest["snapshots"]
+                if s.get("tag") == tag
+            }
+            dropped += len(tagged)
             for s in manifest["snapshots"]:
                 if tag in (s.get("folded_tags") or []):
                     raise RuntimeError(
@@ -573,11 +508,28 @@ class TableIO:
                         "BEFORE compacting, or restore the table from a "
                         "pre-compaction snapshot id."
                     )
-        dropped = 0
+                # an include chain that reaches a tagged snapshot enters it
+                # through a direct include, so checking direct includes
+                # covers every chain
+                if s.get("tag") != tag and tagged & set(s.get("includes", [])):
+                    raise RuntimeError(
+                        f"snapshot {s['snapshot_id']!r} of table {t!r} is "
+                        f"not tagged {tag!r} but includes a snapshot that "
+                        "is: rolling the tag back would cut its include "
+                        "chain and lose every row below it. A later write "
+                        "built on this attempt's partial work; restore the "
+                        "table from a snapshot id older than the tag."
+                    )
+        if dropped and self.catalog:
+            raise RuntimeError(
+                f"partial snapshots tagged {tag!r} exist but tag rollback "
+                "is not wired on the Iceberg catalog backend (needs "
+                "WAP/branch commits): replaying this micro-batch would "
+                "append duplicate rows. Roll the tables back out-of-band."
+            )
         for t, manifest in manifests:
             keep = [s for s in manifest["snapshots"] if s.get("tag") != tag]
             if len(keep) != len(manifest["snapshots"]):
-                dropped += len(manifest["snapshots"]) - len(keep)
                 manifest["snapshots"] = keep
                 self._save_manifest(t, manifest)
         return dropped

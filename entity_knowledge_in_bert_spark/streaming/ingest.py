@@ -157,7 +157,6 @@ def stream_incremental_er(
     io,
     pages_dir: str,
     checkpoint_dir: str | None = None,
-    allow_at_least_once: bool = False,
 ):
     """T1+T6 wired to the incremental ER plan (plans/incremental.py):
     stream crawled pages out of a bronze landing directory and fold each
@@ -168,26 +167,18 @@ def stream_incremental_er(
     tables plus a re-cluster of only the touched components — instead of
     the reference's full batch re-run [R: SURVEY.md §3.2].
 
-    Exactly-once despite foreachBatch's at-least-once delivery: every
-    snapshot a merge writes carries a tag derived from (checkpoint,
-    batch_id); the tag is recorded complete only AFTER the whole merge
-    committed. On replay, a fully-merged batch is skipped outright, and
-    the partial snapshots of a crashed attempt are rolled back from the
-    table manifests (TableIO.rollback_tag) before the merge re-runs —
-    so the append chains never accumulate duplicate mention/key/edge
-    rows and the cluster table matches a crash-free run.
+    Exactly-once despite foreachBatch's at-least-once delivery: each
+    micro-batch merges under a tag derived from (checkpoint, batch_id),
+    and IncrementalER.merge skips a tag that already completed and rolls
+    back a crashed attempt's partial snapshots before re-running — so
+    the append chains never accumulate duplicate mention/key/edge rows
+    and the cluster table matches a crash-free run. On the Iceberg
+    catalog backend a replay that would need a rollback hard-fails.
 
     Requires a base warehouse already built by ERPipeline.run() (the
     frozen model_idf / block_salts artifacts). Runs with availableNow
     and blocks until the backlog drains; returns the updated cluster
     table.
-
-    ``allow_at_least_once`` (ADVICE r4): on the Iceberg catalog backend,
-    where tag rollback is not wired, replaying a PARTIALLY-committed
-    micro-batch would duplicate rows — by default that replay hard-fails
-    instead of silently degrading the exactly-once contract. Opt in to
-    accept at-least-once for such a batch. Crash-free runs, and replays
-    of batches that never wrote anything, are exactly-once either way.
     """
     import hashlib
 
@@ -208,16 +199,10 @@ def stream_incremental_er(
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        tag = f"stream-{ckpt_id}-batch-{batch_id}"
-        if io.merge_complete(tag):
-            return  # replay of a fully-committed batch: skip
-        # drop partial snapshots of a crashed attempt; on the Iceberg
-        # catalog backend (no WAP rollback wired) this hard-fails when
-        # duplication would actually occur unless the caller opted into
-        # at-least-once — ADVICE r4
-        io.try_rollback_tag(tag, allow_at_least_once=allow_at_least_once)
-        IncrementalER(spark, io).merge(batch_df, tag=tag)
-        io.mark_merge_complete(tag)
+        IncrementalER(spark, io).merge(
+            batch_df, tag=f"stream-{ckpt_id}-batch-{batch_id}"
+        )
+
     q = (
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)

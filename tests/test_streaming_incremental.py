@@ -19,21 +19,26 @@ N_BASE, N_D1, N_D2 = 300, 60, 60
 
 
 @pytest.fixture(scope="module")
-def warehouses(spark, tmp_path_factory):
-    """One base build, copied: wh_stream gets the streaming merges,
-    wh_manual the same two batches via direct merge() calls."""
-    base_wh = str(tmp_path_factory.mktemp("wh_base"))
-    ERPipeline(spark, TableIO(spark, base_wh)).run(
-        datagen.gen_pages_df(spark, N_BASE)
+def base_wh(spark, tmp_path_factory):
+    """The one base build of this module; tests merge into copies."""
+    wh = str(tmp_path_factory.mktemp("wh_base"))
+    ERPipeline(spark, TableIO(spark, wh)).run(datagen.gen_pages_df(spark, N_BASE))
+    return wh
+
+
+def _copy(base_wh, tmp_path_factory, name):
+    wh = str(tmp_path_factory.mktemp(name)) + "/wh"
+    shutil.copytree(base_wh, wh)
+    return wh
+
+
+@pytest.fixture(scope="module")
+def warehouses(spark, base_wh, tmp_path_factory):
+    """wh_stream gets the streaming merges, wh_manual the same two
+    batches via direct merge() calls."""
+    wh_stream, wh_manual, wh_replay, wh_clean = (
+        _copy(base_wh, tmp_path_factory, n) for n in ("whs", "whm", "whr", "whc")
     )
-    wh_stream = str(tmp_path_factory.mktemp("whs")) + "/wh"
-    wh_manual = str(tmp_path_factory.mktemp("whm")) + "/wh"
-    wh_replay = str(tmp_path_factory.mktemp("whr")) + "/wh"
-    wh_clean = str(tmp_path_factory.mktemp("whc")) + "/wh"
-    shutil.copytree(base_wh, wh_stream)
-    shutil.copytree(base_wh, wh_manual)
-    shutil.copytree(base_wh, wh_replay)
-    shutil.copytree(base_wh, wh_clean)
 
     # bronze landing dir: two single-file deltas = two micro-batches
     bronze = str(tmp_path_factory.mktemp("bronze"))
@@ -76,10 +81,10 @@ def test_stream_covers_all_batches(warehouses):
 
 def test_replay_after_crash_is_exactly_once(warehouses):
     """foreachBatch is at-least-once (ADVICE r2): simulate a crashed
-    merge attempt (partial tagged appends), then the replay protocol —
-    rollback_tag + re-merge + mark complete — and require the cluster
-    table to equal a crash-free single merge. A second replay of the
-    completed tag must be a pure skip."""
+    merge attempt (partial tagged appends), then replay it with the tag
+    alone — merge rolls the partial work back itself — and require the
+    cluster table to equal a crash-free single merge. A second call with
+    the completed tag must be a pure skip: no manifest changes."""
     spark, _, _, wh_replay, wh_clean, _, d1, _ = warehouses
     io_r = TableIO(spark, wh_replay)
     tag = "stream-test-batch-0"
@@ -92,50 +97,32 @@ def test_replay_after_crash_is_exactly_once(warehouses):
                tag=tag)
     io_r.write(spark.createDataFrame([("junk", 9)], "tok string, idf int"),
                "stage_block", stage="block_delta", append=True, tag=tag)
-    crashed_extract = io_r.read("stage_extract").count()
 
-    # replay: rollback partial work, merge for real, record completion
-    assert not io_r.merge_complete(tag)
-    io_r.rollback_tag(tag)
-    assert io_r.read("stage_extract").count() < crashed_extract
-    IncrementalER(spark, io_r).merge(d1, tag=tag)
-    io_r.mark_merge_complete(tag)
+    replayed = IncrementalER(spark, io_r).merge(d1, tag=tag)
 
     # crash-free reference: the same single merge on an untouched copy
     io_c = TableIO(spark, wh_clean)
-    clean = IncrementalER(spark, io_c).merge(d1)
-    clusters = io_r.read("stage_cluster")
-    assert _cluster_set(clusters) == _cluster_set(clean)
-    # no duplicate mention rows (the replay-duplication failure mode)
-    dup = (
-        clusters.groupBy("mention_id").count().filter(F.col("count") > 1)
-    )
-    assert dup.count() == 0
-    mentions_rows = io_r.read("stage_mention").count()
-    distinct_mentions = (
-        io_r.read("stage_mention").select("mention_id").distinct().count()
-    )
-    assert mentions_rows == distinct_mentions
+    clean = _cluster_set(IncrementalER(spark, io_c).merge(d1))
+    assert _cluster_set(replayed) == clean
 
     # replay of a COMPLETED tag must not change anything
-    before = io_r.read("stage_extract").count()
-    assert io_r.merge_complete(tag)
-    after = io_r.read("stage_extract").count()
-    assert after == before
+    before = dict(io_r._manifests())
+    again = IncrementalER(spark, io_r).merge(d1, tag=tag)
+    assert dict(io_r._manifests()) == before
+    assert _cluster_set(again) == clean
+    # no duplicate mention rows (the replay-duplication failure mode)
+    dup = again.groupBy("mention_id").count().filter(F.col("count") > 1)
+    assert dup.count() == 0
+    mentions = io_r.read("stage_mention")
+    assert mentions.count() == mentions.select("mention_id").distinct().count()
 
 
-def test_stream_recrawl_batch(spark, tmp_path_factory):
+def test_stream_recrawl_batch(spark, base_wh, tmp_path_factory):
     """A re-crawl micro-batch through the streaming fold must equal the
     same delta merged manually — retract semantics (tombstones +
     component re-solve) survive the foreachBatch wrapper."""
-    base_wh = str(tmp_path_factory.mktemp("wh_rc_base"))
-    ERPipeline(spark, TableIO(spark, base_wh)).run(
-        datagen.gen_pages_df(spark, 200)
-    )
-    wh_s = str(tmp_path_factory.mktemp("wh_rc_s")) + "/wh"
-    wh_m = str(tmp_path_factory.mktemp("wh_rc_m")) + "/wh"
-    shutil.copytree(base_wh, wh_s)
-    shutil.copytree(base_wh, wh_m)
+    wh_s = _copy(base_wh, tmp_path_factory, "wh_rc_s")
+    wh_m = _copy(base_wh, tmp_path_factory, "wh_rc_m")
 
     delta = datagen.gen_pages_df(spark, 40, start=0, generation=1)
     bronze = str(tmp_path_factory.mktemp("bronze_rc"))
@@ -152,26 +139,24 @@ def test_stream_recrawl_batch(spark, tmp_path_factory):
     assert tomb_s and tomb_s == tomb_m
 
 
-def test_compaction_composes_with_replay_protocol(spark, tmp_path_factory):
+def test_compaction_composes_with_replay_protocol(spark, base_wh, tmp_path_factory):
     """TableIO.compact between micro-batches composes with exactly-once
-    (r6): a replay of a COMPLETED batch is still skipped by the
-    protocol's merge_complete check — compaction never reaches the
+    (r6): a replay of a COMPLETED batch is still skipped — its tagged
+    stage_cluster entry survives compaction, so merge never reaches the
     rollback path — while a crashed UNCOMMITTED tag folded by a
     premature compact makes the replay hard-fail loudly instead of
     silently appending duplicates."""
-    wh = str(tmp_path_factory.mktemp("wh_compact_stream"))
-    io = TableIO(spark, wh)
-    ERPipeline(spark, io).run(datagen.gen_pages_df(spark, 120))
-    d1 = datagen.gen_pages_df(spark, 40, start=120)
+    io = TableIO(spark, _copy(base_wh, tmp_path_factory, "wh_compact_stream"))
+    d1 = datagen.gen_pages_df(spark, 40, start=N_BASE)
     tag = "stream-ck-batch-0"
     IncrementalER(spark, io).merge(d1, tag=tag)
-    io.mark_merge_complete(tag)
     for t in ("stage_mention", "stage_score", "stage_cluster"):
         io.compact(t)
     before = _cluster_set(io.read("stage_cluster"))
-    # replay of the completed batch: fold() returns before any rollback
-    assert io.merge_complete(tag)
-    assert _cluster_set(io.read("stage_cluster")) == before
+    manifests = dict(io._manifests())
+    # replay of the completed batch: skipped before any rollback
+    assert _cluster_set(IncrementalER(spark, io).merge(d1, tag=tag)) == before
+    assert dict(io._manifests()) == manifests
 
     # crashed attempt whose partial append gets folded by a premature
     # compact: the replay's rollback step must refuse, not duplicate
@@ -183,6 +168,5 @@ def test_compaction_composes_with_replay_protocol(spark, tmp_path_factory):
     io.write(partial, "stage_extract", stage="extract_delta", append=True,
              tag=tag2)
     io.compact("stage_extract")
-    assert not io.merge_complete(tag2)
     with pytest.raises(RuntimeError, match="folded into compacted"):
-        io.try_rollback_tag(tag2)
+        IncrementalER(spark, io).merge(d1, tag=tag2)

@@ -146,12 +146,27 @@ def test_tag_rollback_restores_prior_state(spark, io):
     assert io.rollback_tag("b0") == 0
 
 
-def test_merge_complete_record(io):
-    assert not io.merge_complete("batch-1")
-    io.mark_merge_complete("batch-1")
-    io.mark_merge_complete("batch-1")  # idempotent
-    assert io.merge_complete("batch-1")
-    assert not io.merge_complete("batch-2")
+def test_rollback_refuses_tag_under_a_later_chain(spark, io):
+    """A tagged append that a later untagged snapshot includes cannot be
+    rolled back: dropping its entry would cut the later snapshot's chain
+    and lose the base rows below it. The refusal changes no manifest,
+    in any table; the tag's own snapshots may still include each other
+    (retract_delta appends onto the tagged tombstone_compact)."""
+    io.write(spark.range(10), "t9", stage="s1")
+    io.write(spark.range(10, 14), "t9", stage="s1", append=True, tag="A")
+    io.write(spark.range(14, 17), "t9", stage="s1", append=True)
+    io.write(spark.range(3), "t10", stage="s1", tag="A")
+    before = dict(io._manifests())
+    with pytest.raises(RuntimeError, match="includes a snapshot"):
+        io.rollback_tag("A")
+    assert dict(io._manifests()) == before
+    assert io.read("t9").count() == io.chain_rows("t9") == 17
+
+    io.write(spark.range(5), "t11", stage="s1", tag="B")
+    io.write(spark.range(5, 7), "t11", stage="s1", append=True, tag="B")
+    assert io.rollback_tag("B") == 2
+    with pytest.raises(FileNotFoundError):
+        io.read("t11")
 
 
 class _IcebergWriter:
@@ -233,57 +248,18 @@ def test_iceberg_write_branch(tmp_path):
 
 
 def test_iceberg_rollback_not_implemented(tmp_path):
-    from entity_knowledge_in_bert_spark.sources.tableio import TableIO
-
+    """On the catalog backend tag rollback is not wired (it needs
+    WAP/branch commits). With no tagged snapshot there is nothing to roll
+    back, so a replay stays exactly-once; a partial tagged snapshot
+    hard-fails instead of letting the replay append duplicate rows."""
     io2 = TableIO(_IcebergSpark(), str(tmp_path / "iwh3"), catalog="ice")
-    import pytest as _pytest
-
-    with _pytest.raises(NotImplementedError):
-        io2.rollback_tag("x")
-
-
-def test_iceberg_try_rollback_duplication_aware(tmp_path):
-    """ADVICE r4 (medium): on the catalog backend the exactly-once
-    degradation is no longer silent-by-default. No partial tagged
-    snapshots -> clean 0 (replay still exactly-once). Partial snapshots
-    present -> hard-fail unless the caller opted into at-least-once, in
-    which case it warns and returns 0."""
-    import warnings
-
-    from entity_knowledge_in_bert_spark.sources.tableio import TableIO
-
-    io2 = TableIO(_IcebergSpark(), str(tmp_path / "iwh4"), catalog="ice")
-    # nothing tagged yet: nothing to roll back, no warning, no failure
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert io2.try_rollback_tag("x") == 0
-    assert not any("at-least-once" in str(x.message) for x in w)
-
+    assert io2.rollback_tag("x") == 0
     # a crashed attempt left a partial tagged snapshot behind
     io2.write(_IcebergDF([]), "t", stage="s", tag="x")
-    assert io2.has_tag("x") and not io2.has_tag("y")
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="duplicate"):
-        io2.try_rollback_tag("x")
-    # explicit opt-in: warned degradation instead of failure
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert io2.try_rollback_tag("x", allow_at_least_once=True) == 0
-    assert any("at-least-once" in str(x.message) for x in w)
-
-
-def test_parquet_try_rollback_delegates(spark, tmp_path):
-    """On the parquet backend try_rollback_tag IS rollback_tag."""
-    from entity_knowledge_in_bert_spark.sources.tableio import TableIO
-
-    io2 = TableIO(spark, str(tmp_path / "wh_tr"))
-    io2.write(spark.range(3), "t", stage="s", tag="bX")
-    assert io2.try_rollback_tag("bX") == 1
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        io2.read("t")
+    assert io2.has_tag("t", "x") and not io2.has_tag("t", "y")
+    with pytest.raises(RuntimeError, match="duplicate"):
+        io2.rollback_tag("x")
+    assert io2.has_tag("t", "x")
 
 
 def test_default_driver_mem_derivation():
@@ -413,8 +389,6 @@ def test_compact_records_folded_tags_and_blocks_rollback(spark, io):
     assert "b7" in io.snapshot_entry("tc3").get("folded_tags", [])
     with pytest.raises(RuntimeError, match="folded into compacted"):
         io.rollback_tag("b7")
-    with pytest.raises(RuntimeError, match="folded into compacted"):
-        io.try_rollback_tag("b7")
     # untouched tags still roll back fine
     io.write(spark.range(3), "tc3b", stage="s1", tag="b8")
     assert io.rollback_tag("b8") == 1
