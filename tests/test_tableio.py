@@ -249,10 +249,20 @@ def test_iceberg_write_branch(tmp_path):
 
 def test_iceberg_rollback_not_implemented(tmp_path):
     """On the catalog backend tag rollback is not wired (it needs
-    WAP/branch commits). With no tagged snapshot there is nothing to roll
-    back, so a replay stays exactly-once; a partial tagged snapshot
-    hard-fails instead of letting the replay append duplicate rows."""
+    WAP/branch commits): a tagged snapshot is never dropped."""
     io2 = TableIO(_IcebergSpark(), str(tmp_path / "iwh3"), catalog="ice")
+    io2.write(_IcebergDF([]), "t", stage="s", tag="x")
+    with pytest.raises(RuntimeError):
+        io2.rollback_tag("x")
+    assert io2.has_tag("t", "x")
+
+
+def test_iceberg_try_rollback_duplication_aware(tmp_path):
+    """On the catalog backend rollback_tag is duplication-aware. With no
+    tagged snapshot there is nothing to roll back, so a replay stays
+    exactly-once; a partial tagged snapshot hard-fails instead of letting
+    the replay append duplicate rows."""
+    io2 = TableIO(_IcebergSpark(), str(tmp_path / "iwh4"), catalog="ice")
     assert io2.rollback_tag("x") == 0
     # a crashed attempt left a partial tagged snapshot behind
     io2.write(_IcebergDF([]), "t", stage="s", tag="x")
